@@ -25,6 +25,19 @@ def _optimized(spark, name, sf_dir) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def test_container_audits_spread_matches_table(spark, sf_smoke):
+    """Each container audit's plan carries a RoundRobin exchange exactly
+    when its AUDITS row says spread (explain only, nothing runs).  exif
+    and webp stay unspread: the measured counter-case noted at AUDITS."""
+    from vector_ai_npm_spark.multimodal.audits import AUDITS
+
+    for name, (_row, _schema, spread) in AUDITS.items():
+        plan = _plan(spark, name, sf_smoke)
+        assert ("RoundRobinPartitioning" in plan) == spread, f"{name}:\n{plan}"
+    unspread = {name for name, (_, _, spread) in AUDITS.items() if not spread}
+    assert unspread == {"multimodal_exif_orientation", "multimodal_webp_dims"}
+
+
 def test_filter_project_pushes_predicates_and_prunes(spark, sf_smoke):
     plan = _plan(spark, "filter_project", sf_smoke)
     assert "PushedFilters: [" in plan

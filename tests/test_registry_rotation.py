@@ -1,7 +1,8 @@
 """The driver checks only the first 50 queries per round; registry order
 is therefore a rotation schedule derived from past CORRECTNESS_r*.json
 files.  Pin the three-tier sort: previously-failed first, then
-never-attempted, then driver-green."""
+never-attempted, then driver-green (least recently verified first),
+ties broken by name."""
 
 from __future__ import annotations
 
@@ -90,52 +91,23 @@ def test_window_prioritizes_unverified():
         assert name in window
 
 
-# The 50 names that had no driver CORRECTNESS row after round 5 (the 34
-# round-5 backlog + the 16 round-6 additions).  Pinned BY NAME so later
-# registrations provably cannot displace them from the round-6 window.
-ROUND6_DEBT = frozenset({
-    "mine_hard_negatives", "retrieval_eval_ndcg", "cluster_kmeans_assign",
-    "dedup_semantic", "semdedup_recall", "jaccard_cap_recall",
-    "lm_bigram_score", "tokenizer_fertility", "curate_dsir_masses",
-    "curate_dsir_select", "stream_static_enrich", "stream_tws_totals",
-    "stream_dedup_incremental", "multimodal_decode_png",
-    "multimodal_decode_jpeg", "window_moving_median", "table_diff",
-    "dq_checks", "funnel_time_to_convert", "cohort_retention",
-    "events_path_ngrams", "agg_mode_per_key", "window_anomaly_zscore",
-    "timeseries_gapfill", "join_bloom_filtered", "concurrency_sweep",
-    "join_partition_pruned", "profile_table", "agg_histogram",
-    "agg_histogram_equidepth", "recursive_cte_closure", "events_rfm",
-    "attribution_first_touch", "rolling_active_users", "join_fuzzy_string",
-    "agg_skyline", "agg_gini", "agg_corr_matrix", "diagnose_skew",
-    "orders_pareto_abc", "events_anomaly_seasonal", "window_ewma",
-    "anomaly_mad", "udtf_sentences", "udf_mapinarrow", "json_variant",
-    "layout_cluster_zorder", "agg_sketch_setops", "scan_schema_evolution",
-    "join_asof_nearest",
-})
+def test_every_driver_row_is_registered():
+    """Every name the driver has a CORRECTNESS_r*.json row for must
+    still be registered: a query that moves between modules keeps its
+    name, so a row whose name vanished means a face was lost."""
+    from pathlib import Path
+
+    root = Path(registry.__file__).resolve().parents[1]
+    seen: set[str] = set()
+    for path in root.glob("CORRECTNESS_r*.json"):
+        seen |= set(json.loads(path.read_text()))
+    registry._load_all_modules()
+    missing = seen - set(registry._QUERIES)
+    assert seen and not missing, f"driver rows, no registered query: {missing}"
 
 
-def test_round6_debt_window_pin():
-    """Round-6 debt pin (round-5 verdict item 1): every ROUND6_DEBT name
-    that still has no driver row must hold a slot in the upcoming
-    first-50 window, so the driver-verification debt provably clears.
-    Round-7 registrations land AFTER all of these in registration order
-    (registry._load_all_modules import order), so the tier-1 FIFO sort
-    keeps the debt fronted until its rows land."""
-    qs = list(registry.all_queries())
-    _verified, attempted, _ = registry._driver_history()
-    debt = [n for n in ROUND6_DEBT if n not in attempted]
-    window = set(qs[:50])
-    outside = [n for n in debt if n not in window]
-    assert not outside, (
-        f"{len(debt)} round-6 debt queries unverified but {len(outside)} "
-        f"fell outside the 50-slot window: {outside}"
-    )
-
-
-# Every query added in round 10 (wave 44+), pinned BY NAME (the round-9
-# verdict's rotation invariant: new waves must front the next window —
-# re-greening old rows is what the rest of the window is for, but a new
-# query with no driver row yet is this round's debt and must clear NOW).
+# Queries added in rounds 10, 11 and 13, pinned BY NAME so a rename or a
+# lost registration during a module move shows up as a missing name.
 ROUND10_ADDITIONS = frozenset({
     "eval_kendall_tau_exact",
     "multimodal_decode_tiff",
@@ -169,34 +141,6 @@ ROUND10_ADDITIONS = frozenset({
     "udtf_dynamic_schema",
 })
 
-
-def test_round10_additions_front_the_window():
-    """Every round-10 query that has no driver row yet must hold a slot
-    in the upcoming 50-query window — wave-44+ additions may never sit
-    behind green-tier re-verification."""
-    qs = list(registry.all_queries())
-    _verified, attempted, _ = registry._driver_history()
-    debt = [n for n in ROUND10_ADDITIONS if n in registry._QUERIES and n not in attempted]
-    window = set(qs[:50])
-    outside = [n for n in debt if n not in window]
-    assert not outside, (
-        f"round-10 additions fell outside the 50-slot window: {outside}"
-    )
-
-
-def test_round10_additions_registered():
-    """The pin above is vacuous if a name is misspelled — every
-    ROUND10_ADDITIONS entry that claims to exist must actually be
-    registered once its module lands (names registered so far)."""
-    registry._load_all_modules()
-    known = set(registry._QUERIES)
-    landed = ROUND10_ADDITIONS & known
-    assert "eval_kendall_tau_exact" in landed
-
-
-# Every query added in round 11 (wave 65+), pinned BY NAME — same
-# invariant as ROUND10_ADDITIONS: a new query with no driver row is this
-# round's debt and must hold a slot in the upcoming 50-query window.
 ROUND11_ADDITIONS = frozenset({
     "multimodal_decode_jpeg_variants",
     "vector_store_ivf_delete",
@@ -213,67 +157,72 @@ ROUND11_ADDITIONS = frozenset({
     "agg_count_min_sketch",
 })
 
-
-def test_round11_additions_front_the_window():
-    qs = list(registry.all_queries())
-    _verified, attempted, _ = registry._driver_history()
-    debt = [
-        n for n in ROUND11_ADDITIONS
-        if n in registry._QUERIES and n not in attempted
-    ]
-    window = set(qs[:50])
-    outside = [n for n in debt if n not in window]
-    assert not outside, (
-        f"round-11 additions fell outside the 50-slot window: {outside}"
-    )
-
-
 ROUND13_ADDITIONS = frozenset({
     "knn_graph_insert_contract",
     "multimodal_decode_tiff_jpeg",
 })
 
 
-def test_round13_additions_front_the_window():
-    qs = list(registry.all_queries())
-    _verified, attempted, _ = registry._driver_history()
-    debt = [
-        n for n in ROUND13_ADDITIONS
-        if n in registry._QUERIES and n not in attempted
-    ]
-    window = set(qs[:50])
-    outside = [n for n in debt if n not in window]
-    assert not outside, (
-        f"round-13 additions fell outside the 50-slot window: {outside}"
-    )
-
-
-def test_round13_additions_registered():
+def test_round10_additions_registered():
     registry._load_all_modules()
-    known = set(registry._QUERIES)
-    missing = ROUND13_ADDITIONS - known
-    assert not missing, f"ROUND13_ADDITIONS names not registered: {missing}"
+    missing = ROUND10_ADDITIONS - set(registry._QUERIES)
+    assert not missing, f"ROUND10_ADDITIONS names not registered: {missing}"
 
 
 def test_round11_additions_registered():
     registry._load_all_modules()
-    known = set(registry._QUERIES)
-    missing = ROUND11_ADDITIONS - known
+    missing = ROUND11_ADDITIONS - set(registry._QUERIES)
     assert not missing, f"ROUND11_ADDITIONS names not registered: {missing}"
 
 
-def test_never_attempted_tier_is_fifo():
-    """Within the never-attempted tier the window must fill oldest-
-    registration-first: no never-attempted query may sit outside the
-    window while a LATER-registered never-attempted one holds a slot.
-    This is what lets new waves register without displacing old debt."""
+def test_round13_additions_registered():
+    registry._load_all_modules()
+    missing = ROUND13_ADDITIONS - set(registry._QUERIES)
+    assert not missing, f"ROUND13_ADDITIONS names not registered: {missing}"
+
+
+def test_registration_has_no_import_order_dependency():
+    """Importing every package module in REVERSE discovery order (in a
+    fresh interpreter) registers the same (name, oracle) set as the
+    normal walk: no module relies on another having registered first
+    unless it imports that module itself."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = (
+        "import importlib, json, pkgutil\n"
+        "import vector_ai_npm_spark as pkg\n"
+        "names = [m.name for m in pkgutil.walk_packages(\n"
+        "    pkg.__path__, pkg.__name__ + '.')]\n"
+        "for name in reversed(names):\n"
+        "    importlib.import_module(name)\n"
+        "from vector_ai_npm_spark import registry\n"
+        "print(json.dumps(sorted(\n"
+        "    [n, registry._ORACLES.get(n)] for n in registry._QUERIES)))\n"
+    )
+    root = Path(registry.__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    oracles = registry.all_oracles()
+    expected = sorted([n, oracles.get(n)] for n in registry.all_queries())
+    assert json.loads(out.splitlines()[-1]) == expected
+
+
+def test_never_attempted_tier_is_fifo(monkeypatch):
+    """Within the never-attempted tier the window fills in name order:
+    registration order carries no meaning, so ties break by name.  With
+    no driver history every query is never-attempted, so the whole
+    order is the name order."""
     qs = list(registry.all_queries())
     _verified, attempted, _ = registry._driver_history()
-    reg_order = {n: i for i, n in enumerate(registry._QUERIES)}
     never = [n for n in qs if n not in attempted]
-    in_window = [reg_order[n] for n in never if n in set(qs[:50])]
-    outside = [reg_order[n] for n in never if n not in set(qs[:50])]
-    assert not in_window or not outside or max(in_window) < min(outside)
+    assert never == sorted(never)
+    monkeypatch.setattr(registry.Path, "glob", lambda self, pat: iter([]))
+    qs = list(registry.all_queries())
+    assert qs == sorted(qs)
 
 
 def test_rotation_is_deterministic():
@@ -286,8 +235,8 @@ def test_green_tier_orders_least_recently_verified_first():
     50-slot window cycles through the registry re-verifying stale rows."""
     qs = list(registry.all_queries())
     verified, _attempted, last_green = registry._driver_history()
-    green_rounds = [last_green.get(n, 0) for n in qs if n in verified]
-    assert green_rounds == sorted(green_rounds)
+    green_keys = [(last_green.get(n, 0), n) for n in qs if n in verified]
+    assert green_keys == sorted(green_keys)
 
 
 def test_window_rotates_off_previous_round():

@@ -15,7 +15,7 @@ def test_lift_gain_matches_sequential_ntile(spark, sf_oracle):
     """Re-derive the decile table from a driver-side sorted scan with
     the SQL-ntile closed form; lift fractions must match exactly and
     the top decile must out-capture the bottom (informative model)."""
-    from vector_ai_npm_spark.operators.wave20_ops import (
+    from vector_ai_npm_spark.operators.eval_metrics import (
         _N_TILES,
         _cal_scored_id,
     )
@@ -156,7 +156,7 @@ def test_langid_confusion_consistent_with_langid(spark, sf_oracle):
 
 def test_domain_cap_contract(spark, sf_oracle):
     """<= cap per source, deterministic pick set, capped flag honest."""
-    from vector_ai_npm_spark.operators.wave20_ops import _DOMAIN_CAP
+    from vector_ai_npm_spark.text.curation import _DOMAIN_CAP
 
     docs = load_table(spark, sf_oracle, "documents")
     totals = {

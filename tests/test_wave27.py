@@ -14,7 +14,7 @@ def test_recall_curve_levels_and_full_probe_identity(spark, sf_oracle):
     """Beyond the driver contract: compute the actual per-level recall
     numbers and assert the curve is monotone with full-probe == 1.0
     (and the lowest level strictly prunes on this fixture)."""
-    from vector_ai_npm_spark.operators.wave27_ops import (
+    from vector_ai_npm_spark.retrieval.queries import (
         _K,
         _NLIST,
         _PROBES,

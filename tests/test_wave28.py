@@ -8,6 +8,7 @@ from fractions import Fraction
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark import registry
+from vector_ai_npm_spark.dedup.queries import dedup_minhash_pairs
 from vector_ai_npm_spark.io.sources import load_table
 
 
@@ -59,7 +60,7 @@ def test_ivf_append_lands_in_frozen_cells(spark, sf_oracle, tmp_path):
 
 def test_source_pair_rate_matches_pair_reference(spark, sf_oracle):
     pairs = (
-        registry._QUERIES["dedup_minhash_pairs"](spark, sf_oracle)
+        dedup_minhash_pairs(spark, sf_oracle)
         .select("doc_id_a", "doc_id_b")
         .distinct()
         .collect()

@@ -65,7 +65,7 @@ def test_ktruss_fixpoint_and_support_floor(spark):
     proven fixpoint, not an approximation), and every surviving edge
     closes ≥ k-2 triangles inside the truss."""
     from vector_ai_npm_spark.operators.graph_ops import copurchase_edges
-    from vector_ai_npm_spark.operators.wave51_ops import (
+    from vector_ai_npm_spark.operators.graph_ktruss import (
         _ROUNDS,
         ktruss_edges,
     )
@@ -85,7 +85,7 @@ def test_ktruss_is_subgraph_of_kminus1_core(spark):
     each endpoint of each edge has degree ≥ k-1 (its k-2 triangle
     partners plus the edge itself)."""
     from vector_ai_npm_spark.operators.graph_ops import copurchase_edges
-    from vector_ai_npm_spark.operators.wave51_ops import ktruss_edges
+    from vector_ai_npm_spark.operators.graph_ktruss import ktruss_edges
 
     edges = copurchase_edges(spark, SF).select("src", "dst")
     truss = ktruss_edges(edges, k=3).select("src", "dst")

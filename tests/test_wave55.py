@@ -6,7 +6,7 @@ import struct
 
 import pytest
 
-from vector_ai_npm_spark.operators.wave55_ops import (
+from vector_ai_npm_spark.multimodal.apng import (
     _PNG_SIG,
     _chunk,
     apng_audit,

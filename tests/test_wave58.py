@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_ai_npm_spark.operators.wave58_ops import (
-    encode_wav_header,
-    wav_dims,
-)
+from vector_ai_npm_spark.multimodal.wav import encode_wav_header, wav_dims
 
 SF = "/root/testdata/sf0.001"
 
@@ -17,7 +14,7 @@ def test_geo_radius_equals_brute_force(spark):
     """The grid path must reproduce the naive theta join pair-for-pair
     (coverage: no within-R pair escapes a 3x3 neighborhood at G=R;
     dedup: each pair meets in exactly one cell)."""
-    from vector_ai_npm_spark.operators.wave58_ops import join_geo_radius
+    from vector_ai_npm_spark.operators.interval_ops import join_geo_radius
     from vector_ai_npm_spark.io.sources import load_table
 
     got = {
@@ -41,13 +38,15 @@ def test_geo_radius_equals_brute_force(spark):
     }
     assert got == want and len(got) > 0
     # no duplicate pairs from the neighbor expansion
-    from vector_ai_npm_spark.operators.wave58_ops import join_geo_radius as jg
+    from vector_ai_npm_spark.operators.interval_ops import (
+        join_geo_radius as jg,
+    )
     df = jg(spark, SF)
     assert df.count() == df.select("cust", "supp").distinct().count()
 
 
 def test_geo_plan_is_equi_join_not_cartesian(spark):
-    from vector_ai_npm_spark.operators.wave58_ops import join_geo_radius
+    from vector_ai_npm_spark.operators.interval_ops import join_geo_radius
 
     plan = (
         join_geo_radius(spark, SF)

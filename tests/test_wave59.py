@@ -11,7 +11,7 @@ def test_er_variants_recluster_to_their_customer(spark):
     """Every synthesized variant mention must land in its customer's
     cluster (recall through the transitive hub edge), and no cluster
     may span two customers (precision from md5 entropy)."""
-    from vector_ai_npm_spark.operators.wave59_ops import er_cluster_mentions
+    from vector_ai_npm_spark.dedup.components import er_cluster_mentions
 
     rows = er_cluster_mentions(spark, SF).collect()
     by_mention = {r.mention_id: r.entity_id for r in rows}
@@ -33,7 +33,7 @@ def test_er_variants_recluster_to_their_customer(spark):
 
 
 def test_er_canonical_is_min_id_per_cluster(spark):
-    from vector_ai_npm_spark.operators.wave59_ops import er_cluster_mentions
+    from vector_ai_npm_spark.dedup.components import er_cluster_mentions
 
     df = er_cluster_mentions(spark, SF)
     agg = df.groupBy("entity_id").agg(
@@ -47,7 +47,7 @@ def test_er_canonical_is_min_id_per_cluster(spark):
 def test_er_pairs_never_cross_blocks(spark):
     """The blocking contract: the pair join is keyed on the block, so
     its plan is an equi-join (never a cartesian over mentions)."""
-    from vector_ai_npm_spark.operators.wave59_ops import er_cluster_mentions
+    from vector_ai_npm_spark.dedup.components import er_cluster_mentions
 
     plan = (
         er_cluster_mentions(spark, SF)
@@ -114,10 +114,7 @@ def test_er_skew_guard_hot_block_preserves_recall(spark):
     import hashlib
 
     from vector_ai_npm_spark.dedup.components import assign_components
-    from vector_ai_npm_spark.operators.wave59_ops import (
-        ER_BLOCK_BUDGET,
-        _er_pairs,
-    )
+    from vector_ai_npm_spark.dedup.components import ER_BLOCK_BUDGET, _er_pairs
 
     rows = []
     # hot block: 300 base names sharing prefix 'aaaa', each with an
@@ -154,7 +151,7 @@ def test_er_pair_set_identical_across_budgets(spark):
     keys) equal components from the pure self-join route (huge budget)
     on the real fixture frame."""
     from vector_ai_npm_spark.dedup.components import assign_components
-    from vector_ai_npm_spark.operators.wave59_ops import _er_pairs, _mentions
+    from vector_ai_npm_spark.dedup.components import _er_pairs, _mentions
 
     mentions = _mentions(spark, SF)
     lo = {

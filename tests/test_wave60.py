@@ -70,9 +70,7 @@ def test_asof_reads_reproduce_each_committed_state(spark):
 
 
 def test_diff_rows_are_exactly_touched_users(spark):
-    from vector_ai_npm_spark.operators.wave60_ops import (
-        store_time_travel_diff,
-    )
+    from vector_ai_npm_spark.retrieval.lifecycle import store_time_travel_diff
 
     rows = store_time_travel_diff(spark, SF).collect()
     assert rows and all(r.asof_ok for r in rows)

@@ -46,9 +46,7 @@ def test_planted_verbatim_run_is_detected_regardless_of_alignment(spark):
 def test_face_pairs_share_real_substrings(spark):
     """Every emitted pair must actually share a 40-char substring —
     verified against the raw texts, not the fingerprints."""
-    from vector_ai_npm_spark.operators.wave62_ops import (
-        dedup_exact_substring,
-    )
+    from vector_ai_npm_spark.text.line_dedup import dedup_exact_substring
     from vector_ai_npm_spark.io.sources import load_table
 
     pairs = dedup_exact_substring(spark, SF).collect()
@@ -66,9 +64,7 @@ def test_face_pairs_share_real_substrings(spark):
 
 
 def test_join_plan_is_fingerprint_keyed(spark):
-    from vector_ai_npm_spark.operators.wave62_ops import (
-        dedup_exact_substring,
-    )
+    from vector_ai_npm_spark.text.line_dedup import dedup_exact_substring
 
     plan = (
         dedup_exact_substring(spark, SF)

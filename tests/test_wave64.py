@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from vector_ai_npm_spark.operators.wave64_ops import make_char_chunks_udtf
+from vector_ai_npm_spark.io.queries import make_char_chunks_udtf
 
 
 def test_schema_follows_the_arity_argument(spark):
@@ -31,7 +31,7 @@ def test_non_literal_or_bad_arity_fails_at_analysis(spark):
 def test_lateral_join_reassembles_corpus(spark, sf_smoke):
     from pyspark.sql import functions as F
 
-    from vector_ai_npm_spark.operators.wave64_ops import udtf_dynamic_schema
+    from vector_ai_npm_spark.io.queries import udtf_dynamic_schema
 
     out = udtf_dynamic_schema(spark, sf_smoke)
     from vector_ai_npm_spark.io.sources import load_table

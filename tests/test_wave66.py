@@ -170,7 +170,7 @@ def test_empty_delete_is_noop(spark, tmp_path):
 
 
 def test_table_udtf_partitions_and_order(spark):
-    from vector_ai_npm_spark.operators.wave66_ops import make_lang_stats_udtf
+    from vector_ai_npm_spark.io.queries import make_lang_stats_udtf
 
     spark.udtf.register("lang_stats_t", make_lang_stats_udtf())
     rows = [
@@ -194,7 +194,7 @@ def test_table_udtf_partitions_and_order(spark):
 
 
 def test_table_udtf_analyze_validates_shape(spark):
-    from vector_ai_npm_spark.operators.wave66_ops import make_lang_stats_udtf
+    from vector_ai_npm_spark.io.queries import make_lang_stats_udtf
 
     spark.udtf.register("lang_stats_v", make_lang_stats_udtf())
     spark.createDataFrame(

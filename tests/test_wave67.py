@@ -21,7 +21,7 @@ def _frame(spark, n=25, dim=8):
 
 
 def test_npy_roundtrip_bit_exact(spark, tmp_path):
-    from vector_ai_npm_spark.operators.wave67_ops import (
+    from vector_ai_npm_spark.io.queries import (
         read_npy_shards,
         write_npy_shards,
     )
@@ -38,7 +38,7 @@ def test_npy_roundtrip_bit_exact(spark, tmp_path):
 def test_npy_shards_are_spec_conformant(spark, tmp_path):
     """Every shard must load with plain numpy (allow_pickle=False) and
     carry the structured dtype — the public-format contract."""
-    from vector_ai_npm_spark.operators.wave67_ops import write_npy_shards
+    from vector_ai_npm_spark.io.queries import write_npy_shards
 
     out = str(tmp_path / "shards")
     write_npy_shards(_frame(spark).repartition(2), out, dim=8)
@@ -55,7 +55,7 @@ def test_npy_shards_are_spec_conformant(spark, tmp_path):
 
 
 def test_npy_corrupt_shard_fails_loudly(spark, tmp_path):
-    from vector_ai_npm_spark.operators.wave67_ops import (
+    from vector_ai_npm_spark.io.queries import (
         read_npy_shards,
         write_npy_shards,
     )
@@ -81,7 +81,7 @@ def test_scan_npy_embeddings_parity(spark, sf_smoke):
 
 
 def test_scan_npy_all_roundtrip_flags_true(spark, sf_smoke):
-    from vector_ai_npm_spark.operators.wave67_ops import scan_npy_embeddings
+    from vector_ai_npm_spark.io.queries import scan_npy_embeddings
 
     out = scan_npy_embeddings(spark, sf_smoke)
     assert out.where(~F.col("roundtrip_ok")).count() == 0

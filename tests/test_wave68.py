@@ -64,7 +64,7 @@ def _tarjan(n_nodes, edge_list):
 
 
 def _run_scc(spark, n, edge_list, **kw):
-    from vector_ai_npm_spark.operators.wave68_ops import scc_colored
+    from vector_ai_npm_spark.operators.graph_scc import scc_colored
 
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node_id long")
     edges = (
@@ -138,7 +138,7 @@ def test_scc_partial_tail_group_decomposes_to_singletons(spark):
     """Non-multiple-of-10 node populations: the tail group's wrap edge
     targets a nonexistent node, is dropped by the live-node join, and
     the tail decomposes into singletons — the oracle's CASE arm."""
-    from vector_ai_npm_spark.operators.wave68_ops import scc_colored
+    from vector_ai_npm_spark.operators.graph_scc import scc_colored
 
     n = 23  # two full 10-cycles + a 3-node tail path
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node_id long")

@@ -8,7 +8,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_temporal_join_picks_the_valid_version(spark):
-    from vector_ai_npm_spark.operators.wave69_ops import join_temporal_validity
+    from vector_ai_npm_spark.streaming.queries import join_temporal_validity
 
     out = join_temporal_validity(spark, SF)
     # exactly one dimension version per event (no fan-out, no drops)
@@ -33,7 +33,7 @@ def test_temporal_join_picks_the_valid_version(spark):
 
 def test_stream_dedup_within_watermark_drops_all_planted_dups(spark):
     from vector_ai_npm_spark.io.sources import load_table
-    from vector_ai_npm_spark.operators.wave69_ops import (
+    from vector_ai_npm_spark.streaming.queries import (
         stream_dedup_within_watermark,
     )
 
@@ -47,7 +47,7 @@ def test_ivm_groups_can_vanish_and_appear(spark):
     """Signed-delta merge edge cases: a user whose every event is
     retracted leaves the view; a user introduced only by inserts enters
     it with delta-only state."""
-    from vector_ai_npm_spark.operators.wave69_ops import ivm_incremental_agg
+    from vector_ai_npm_spark.streaming.queries import ivm_incremental_agg
 
     ev = spark.createDataFrame(
         [
@@ -57,7 +57,7 @@ def test_ivm_groups_can_vanish_and_appear(spark):
         ],
         "event_id long, user_id long, value double",
     )
-    import vector_ai_npm_spark.operators.wave69_ops as mod
+    import vector_ai_npm_spark.streaming.queries as mod
     from unittest import mock
 
     with mock.patch.object(mod, "load_table", lambda s, d, t: ev):

@@ -14,7 +14,7 @@ def test_bleu_components_match_pure_python(spark):
     import re
 
     from vector_ai_npm_spark.io.sources import load_table
-    from vector_ai_npm_spark.operators.wave70_ops import eval_bleu_components
+    from vector_ai_npm_spark.operators.eval_metrics import eval_bleu_components
 
     out = eval_bleu_components(spark, SF).collect()
     assert out, "candidate frame is empty — fixture drift"
@@ -41,7 +41,7 @@ def test_bleu_components_match_pure_python(spark):
 
 
 def test_condensation_degrees_on_fixture(spark):
-    from vector_ai_npm_spark.operators.wave70_ops import graph_condensation
+    from vector_ai_npm_spark.operators.graph_scc import graph_condensation
 
     rows = {r.scc_id: r for r in graph_condensation(spark, SF).collect()}
     # sf0.001: 150 customers = 15 full groups, no tail

@@ -14,7 +14,7 @@ def test_itemsets_match_brute_force(spark):
     """Every frequent 2-/3-itemset and its support recomputed from raw
     baskets (with the planted bundle) by pure-Python combinations."""
     from vector_ai_npm_spark.io.sources import load_table
-    from vector_ai_npm_spark.operators.wave72_ops import (
+    from vector_ai_npm_spark.operators.analytics_ops import (
         _MINSUP,
         _PLANT,
         basket_itemsets_apriori,
@@ -46,7 +46,9 @@ def test_itemsets_match_brute_force(spark):
 
 
 def test_cms_contract_all_green(spark):
-    from vector_ai_npm_spark.operators.wave72_ops import agg_count_min_sketch
+    from vector_ai_npm_spark.operators.sketch_bounds import (
+        agg_count_min_sketch,
+    )
 
     rows = agg_count_min_sketch(spark, SF).collect()
     assert len(rows) == 10
@@ -57,7 +59,9 @@ def test_cms_contract_all_green(spark):
 
 def test_cms_exact_counts_match_groupby(spark):
     from vector_ai_npm_spark.io.sources import load_table
-    from vector_ai_npm_spark.operators.wave72_ops import agg_count_min_sketch
+    from vector_ai_npm_spark.operators.sketch_bounds import (
+        agg_count_min_sketch,
+    )
 
     got = {r.key: r.exact_count
            for r in agg_count_min_sketch(spark, SF).collect()}

@@ -42,7 +42,7 @@ def build(spark, hot: int, cold: int = 2000):
 
 def run(spark, mentions) -> tuple[float, int]:
     from vector_ai_npm_spark.dedup.components import assign_components
-    from vector_ai_npm_spark.operators.wave59_ops import _er_pairs
+    from vector_ai_npm_spark.dedup.components import _er_pairs
 
     best = float("inf")
     n = 0

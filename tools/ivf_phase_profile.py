@@ -159,7 +159,8 @@ def profile_append(spark, ph: Phase) -> None:
 
 
 def profile_compact(spark, ph: Phase) -> None:
-    """vector_store_ivf_compact is in wave41_ops; profile its store verbs."""
+    """vector_store_ivf_compact is in retrieval/lifecycle.py; profile its
+    store verbs."""
     import tempfile
 
     from vector_ai_npm_spark.retrieval.store import (

@@ -16,6 +16,9 @@ Hash discipline for oracle parity: md5 is the cross-engine hash (Spark
 issues). Spark's xxhash64 would be faster JVM-side but has no DuckDB
 counterpart — at production scale swap `_H` for xxhash64 freely (values
 change, semantics don't).
+
+Also here: `dedup_source_pair_rate`, `dedup_near_lsh_routed`, each with
+its notes in a comment above it.
 """
 
 from __future__ import annotations
@@ -665,7 +668,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the first-crawled one). Plan: the components fixpoint (min-label
     propagation) plus ONE extra window over doc-count-sized rows keyed
     by component — negligible next to the pair generation."""
-    from pyspark.sql import Window
 
     from vector_ai_npm_spark.dedup.components import assign_components
 
@@ -832,3 +834,145 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_dup").cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("shared_ratio"),
     )
+
+
+# `dedup_source_pair_rate` — near-dup incidence per source pair: the
+# DOC-LEVEL mirror-detection evidence next to `text_vocab_overlap`'s
+# word-level one (two sources can share vocabulary without sharing
+# documents; shared near-dup PAIRS are the stronger signal a crawler
+# is fetching the same site twice).  Reuses the hash-green banded-LSH
+# candidate pairs verbatim (both faces — the Spark callable and the
+# oracle CTE — so this face can never drift from the dedup family),
+# joins sources onto both sides, canonicalizes the pair, and emits
+# exact counts plus the pair rate over the possible cross-pair count.
+
+@query(
+    "dedup_source_pair_rate",
+    oracle=f"""
+    WITH cand AS ({registry._ORACLES['dedup_minhash_pairs']}),
+    pairs AS (SELECT DISTINCT doc_id_a, doc_id_b FROM cand),
+    tagged AS (
+      SELECT LEAST(da.source, db.source) AS source_a,
+             GREATEST(da.source, db.source) AS source_b
+      FROM pairs p
+      JOIN documents da ON da.doc_id = p.doc_id_a
+      JOIN documents db ON db.doc_id = p.doc_id_b
+    ),
+    m AS (
+      SELECT source_a, source_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
+      FROM tagged GROUP BY 1, 2
+    ),
+    ns AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+      FROM documents GROUP BY source
+    )
+    SELECT m.source_a, m.source_b, m.n_pairs,
+           na.n_docs AS docs_a, nb.n_docs AS docs_b,
+           CAST(CASE WHEN m.source_a = m.source_b
+                     THEN (na.n_docs * (na.n_docs - 1)) // 2
+                     ELSE na.n_docs * nb.n_docs END AS BIGINT)
+             AS pairs_possible,
+           CAST(m.n_pairs AS DOUBLE)
+             / CAST(CASE WHEN m.source_a = m.source_b
+                         THEN (na.n_docs * (na.n_docs - 1)) // 2
+                         ELSE na.n_docs * nb.n_docs END AS DOUBLE)
+             AS pair_rate
+    FROM m
+    JOIN ns na ON na.source = m.source_a
+    JOIN ns nb ON nb.source = m.source_b
+    """,
+)
+def dedup_source_pair_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup incidence per source pair — see the notes above.
+    Candidate pairs come from dedup_minhash_pairs verbatim; sources
+    attach by two broadcast joins on the output-bound pair frame; the
+    matrix is ≤|sources|² rows."""
+    pairs = (
+        dedup_minhash_pairs(spark, sf_dir)
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
+    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    da = docs.select(
+        F.col("doc_id").alias("doc_id_a"), F.col("source").alias("sa")
+    )
+    db = docs.select(
+        F.col("doc_id").alias("doc_id_b"), F.col("source").alias("sb")
+    )
+    tagged = (
+        pairs.join(F.broadcast(da), "doc_id_a")
+        .join(F.broadcast(db), "doc_id_b")
+        .select(
+            F.least("sa", "sb").alias("source_a"),
+            F.greatest("sa", "sb").alias("source_b"),
+        )
+    )
+    m = tagged.groupBy("source_a", "source_b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs")
+    )
+    ns = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs")
+    )
+    na = ns.select(
+        F.col("source").alias("source_a"), F.col("n_docs").alias("docs_a")
+    )
+    nb = ns.select(
+        F.col("source").alias("source_b"), F.col("n_docs").alias("docs_b")
+    )
+    possible = F.when(
+        F.col("source_a") == F.col("source_b"),
+        F.expr("docs_a * (docs_a - 1) div 2"),
+    ).otherwise(F.col("docs_a") * F.col("docs_b")).cast("bigint")
+    return (
+        m.join(F.broadcast(na), "source_a")
+        .join(F.broadcast(nb), "source_b")
+        .select(
+            "source_a", "source_b", "n_pairs", "docs_a", "docs_b",
+            possible.alias("pairs_possible"),
+            (F.col("n_pairs").cast("double") / possible.cast("double")).alias(
+                "pair_rate"
+            ),
+        )
+    )
+
+
+# `dedup_near_lsh_routed` — the banded-minhash candidate core +
+# exact token-set jaccard that `mllib_lsh_pairs` routes to above
+# MLLIB_LSH_MAX_DOCS (above, r12: MLlib's OR-only
+# MinHashLSH is quadratic on text corpora — measured 10-minute blowout
+# at sf1's 50k docs vs 40 s routed).  The route only activates at
+# scale, so THIS face pins its semantics with a full hash oracle at
+# every sf: candidates from the same band SQL the dedup_minhash_pairs
+# oracle uses, exact jaccard distance, threshold 0.6.
+
+def _routed_oracle() -> str:
+    """Candidates from the SAME band SQL as the dedup_minhash_pairs
+    oracle (reused verbatim — the two stay in lockstep), hydrated with
+    token sets and filtered by exact jaccard distance."""
+    pairs_sql = registry._ORACLES["dedup_minhash_pairs"]
+    return f"""
+    WITH cand AS ({pairs_sql}),
+    toks AS (
+      SELECT doc_id, list_distinct({_DUCK_TOKS}) AS tok_set
+      FROM documents
+      WHERE len({_DUCK_TOKS}) > 0
+    )
+    SELECT c.doc_id_a, c.doc_id_b,
+           1.0 - CAST(len(list_intersect(a.tok_set, b.tok_set)) AS DOUBLE) /
+                 len(list_distinct(list_concat(a.tok_set, b.tok_set)))
+             AS jaccard_dist
+    FROM cand c
+    JOIN toks a ON c.doc_id_a = a.doc_id
+    JOIN toks b ON c.doc_id_b = b.doc_id
+    WHERE 1.0 - CAST(len(list_intersect(a.tok_set, b.tok_set)) AS DOUBLE) /
+                len(list_distinct(list_concat(a.tok_set, b.tok_set)))
+          <= 0.6
+    """
+
+
+@query("dedup_near_lsh_routed", oracle=_routed_oracle())
+def dedup_near_lsh_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scale path of mllib_lsh_pairs, hash-oracled at every sf
+    (notes above): banded candidates + exact token jaccard."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _banded_routed_pairs(docs.select("doc_id", "text"), 0.6)

@@ -1,4 +1,8 @@
-"""Registry entries for the embedding stage (SURVEY §2A A5, A6/B2 sink)."""
+"""Registry entries for the embedding stage (SURVEY §2A A5, A6/B2 sink).
+
+Also here: `embedding_centroid_drift`, with its notes in a comment above
+it.
+"""
 
 from __future__ import annotations
 
@@ -10,8 +14,12 @@ from pyspark.sql import functions as F
 from vector_ai_npm_spark.chunking.mdx import split_mdx_headers, synth_mdx
 from vector_ai_npm_spark.chunking.queries import _ORACLE_CHUNKS_CTE
 from vector_ai_npm_spark.embedding.hashing import embed_input_expr, hashing_embedder
-from vector_ai_npm_spark.functions.numeric import o_davg
+from vector_ai_npm_spark.functions.numeric import davg, o_davg
 from vector_ai_npm_spark.io.sources import load_table
+from vector_ai_npm_spark.operators.eval_metrics import (
+    _duck_hash_mod,
+    _spark_hash_mod,
+)
 from vector_ai_npm_spark.registry import query
 
 
@@ -395,3 +403,137 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("manifest_matches_fs", len(m) == n_files),
     ]
     return spark.createDataFrame(rows, "scope string, ok boolean")
+
+
+# `embedding_centroid_drift` — per-label cosine similarity between the
+# centroids of two deterministic md5 halves of the embedding corpus
+# (the "did the embedding distribution move between ingest batches"
+# drift audit — run before trusting an incremental index build; with
+# real class-clustered embeddings a healthy split shows cosine ≈ 1 per
+# label and a drifted upstream encoder shows it dropping.  On the
+# synthetic fixture the per-label MEANS are near zero, so half-split
+# cosines hover near 0 — the readout honestly reports "no mean
+# signal", which is itself the audit working).  Exactness:
+# per-(label, half, dim) means ride
+# the exact-decimal davg (bit-equal doubles both engines), are then
+# quantized to MICRO-integers (floor(m·10⁶+½) — correctly-rounded ops
+# only, the wave-21 ledger idiom), so dot product and squared norms
+# fold as EXACT int64 sums with no ordered float fold anywhere; the
+# final cosine is one identical sqrt-division expression.
+#
+# Scale shape: centroid drift reduces the corpus in one Generate +
+# (label, half, dim)-keyed decimal aggregate (state O(labels·dims),
+# the vector_mean_pool contract) and everything after runs on that
+# frame.
+
+_D38 = "decimal(38,0)"
+
+
+@query(
+    "embedding_centroid_drift",
+    oracle=f"""
+    WITH x AS (
+      SELECT label, {_duck_hash_mod("vec_id", "#drift", 2)} AS half,
+             CAST(i - 1 AS BIGINT) AS dim_pos,
+             CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE) AS v
+      FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)
+    ),
+    means AS (
+      SELECT label, dim_pos,
+             CAST(FLOOR({o_davg('CASE WHEN half = 0 THEN v END')}
+                        * 1000000 + 0.5) AS BIGINT) AS ma,
+             CAST(FLOOR({o_davg('CASE WHEN half = 1 THEN v END')}
+                        * 1000000 + 0.5) AS BIGINT) AS mb
+      FROM x GROUP BY label, dim_pos
+    ),
+    counts AS (
+      SELECT label,
+             CAST(COUNT(DISTINCT CASE WHEN half = 0 THEN vec_id END)
+                  AS BIGINT) AS n_a,
+             CAST(COUNT(DISTINCT CASE WHEN half = 1 THEN vec_id END)
+                  AS BIGINT) AS n_b
+      FROM (SELECT label, vec_id,
+                   {_duck_hash_mod("vec_id", "#drift", 2)} AS half
+            FROM embeddings)
+      GROUP BY label
+    ),
+    folds AS (
+      SELECT label,
+             CAST(SUM(CAST(ma AS DECIMAL(38,0)) * mb) AS BIGINT) AS dot_u2,
+             CAST(SUM(CAST(ma AS DECIMAL(38,0)) * ma) AS BIGINT)
+               AS norm_a2_u2,
+             CAST(SUM(CAST(mb AS DECIMAL(38,0)) * mb) AS BIGINT)
+               AS norm_b2_u2
+      FROM means GROUP BY label
+    )
+    SELECT f.label, c.n_a, c.n_b, f.dot_u2, f.norm_a2_u2, f.norm_b2_u2,
+           CAST(f.dot_u2 AS DOUBLE)
+             / SQRT(CAST(CAST(f.norm_a2_u2 AS DECIMAL(38,0))
+                         * f.norm_b2_u2 AS DOUBLE)) AS cosine
+    FROM folds f JOIN counts c ON c.label = f.label
+    """,
+)
+def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label centroid cosine between md5 halves — see the notes
+    above.  One Generate + (label, dim)-keyed decimal aggregate
+    (conditional davg per half in the SAME pass), micro-quantized
+    means fold as exact int64s; |component| ≤ ~10³ keeps squares
+    ≤ 10¹⁸·dims inside the DECIMAL(38,0) intermediates."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    half = _spark_hash_mod(F.col("vec_id"), "#drift", 2)
+    x = emb.select(
+        "label",
+        "vec_id",
+        half.alias("half"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
+            "dim_pos", "v"
+        ),
+    )
+    means = x.groupBy(
+        "label", F.col("dim_pos").cast("long").alias("dim_pos")
+    ).agg(
+        F.floor(
+            davg(F.when(F.col("half") == 0, F.col("v"))) * 1000000
+            + F.lit(0.5)
+        )
+        .cast("bigint")
+        .alias("ma"),
+        F.floor(
+            davg(F.when(F.col("half") == 1, F.col("v"))) * 1000000
+            + F.lit(0.5)
+        )
+        .cast("bigint")
+        .alias("mb"),
+    )
+    counts = emb.select(
+        "label", "vec_id", half.alias("half")
+    ).groupBy("label").agg(
+        F.countDistinct(F.when(F.col("half") == 0, F.col("vec_id")))
+        .cast("bigint")
+        .alias("n_a"),
+        F.countDistinct(F.when(F.col("half") == 1, F.col("vec_id")))
+        .cast("bigint")
+        .alias("n_b"),
+    )
+    folds = means.groupBy("label").agg(
+        F.sum(F.col("ma").cast(_D38) * F.col("mb"))
+        .cast("bigint")
+        .alias("dot_u2"),
+        F.sum(F.col("ma").cast(_D38) * F.col("ma"))
+        .cast("bigint")
+        .alias("norm_a2_u2"),
+        F.sum(F.col("mb").cast(_D38) * F.col("mb"))
+        .cast("bigint")
+        .alias("norm_b2_u2"),
+    )
+    return folds.join(F.broadcast(counts), "label").select(
+        "label", "n_a", "n_b", "dot_u2", "norm_a2_u2", "norm_b2_u2",
+        (
+            F.col("dot_u2").cast("double")
+            / F.sqrt(
+                (F.col("norm_a2_u2").cast(_D38) * F.col("norm_b2_u2")).cast(
+                    "double"
+                )
+            )
+        ).alias("cosine"),
+    )

@@ -84,10 +84,3 @@ def materialize_count(df: DataFrame) -> int:
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view for spark.sql() use."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

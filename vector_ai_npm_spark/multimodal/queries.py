@@ -1,4 +1,8 @@
-"""Registry entries for multimodal columns (B30 + binary plumbing)."""
+"""Registry entries for multimodal columns (B30 + binary plumbing).
+
+Also here: `multimodal_decode_jpeg_variants`, `multimodal_decode_webp`,
+each with its notes in a comment above it.
+"""
 
 from __future__ import annotations
 
@@ -12,6 +16,8 @@ from vector_ai_npm_spark.multimodal.binary import (
     synth_media,
 )
 from vector_ai_npm_spark.registry import query
+from collections.abc import Iterator
+import pandas as pd
 
 
 @query(
@@ -152,7 +158,6 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one bounded derived-frame exchange (scale_partitions, r13)
     so the codec rides executor parallelism; a production PIL/opencv
     decoder slots behind the same decode_pixels seam."""
-    from collections.abc import Iterator
 
     import pandas as pd
 
@@ -275,7 +280,6 @@ def multimodal_decode_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame
     identical to `multimodal_decode_png` — encode+decode ride one
     Arrow-batched mapInPandas behind one bounded derived-frame
     exchange (scale_partitions, r13); corpus text never shuffles."""
-    from collections.abc import Iterator
 
     import pandas as pd
 
@@ -399,7 +403,6 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle recomputes dims from doc_id and pins both booleans.
     Same Arrow-batched mapInPandas shape as the PNG face."""
-    from collections.abc import Iterator
 
     import pandas as pd
 
@@ -612,3 +615,319 @@ def multimodal_scene_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = synth_video_media(load_table(spark, sf_dir, "documents"))
     return scene_changes(media, frame_bytes=12, threshold=20.0)
+
+
+# The codec work lives in multimodal/jpeg.py (round 11): the decoder
+# walks the general interleaved T.81 A.2.3 MCU geometry with
+# byte-realigned, sequence-checked restart markers and box-replicate
+# chroma upsampling; the encoder now EMITS those variants too
+# (box-averaged chroma, MCU-interleaved scan, RSTn every N MCUs with DC
+# predictor reset), so every variant is roundtrip-tested against planted
+# fixtures rather than only accepted.
+#
+# `multimodal_decode_jpeg_variants` pins three contracts per asset:
+#
+# * `sub_ok` — each subsampled variant (4:2:0, 4:2:2, 4:4:0) of a
+#     smooth-gradient image decodes dims-exact with mean absolute pixel
+#     error <= 4 (measured ~1 on these ramps at q=92; chroma ramps are
+#     slow so box-average→box-replicate loss stays near the DCT floor —
+#     a geometry bug in either direction blows straight through 4).
+# * `dri_exact` — the decoded pixels of a DRI-encoded stream are
+#     BYTE-IDENTICAL to the no-DRI encode of the same pixels, for 4:4:4
+#     at interval 2 and 4:2:0 at interval 1 (restart only realigns bits
+#     and resets predictors; any drift in the modulo-8 walk or predictor
+#     reset shows as inequality, not fuzz).
+# * `chroma_const_exact` — a gray-RGB image (zero chroma everywhere)
+#     decodes byte-identically through 4:2:0 and 4:4:4: the luma tiles
+#     are the same 8x8 spatial blocks in both geometries and constant
+#     chroma is a fixed point of average/replicate, so this isolates the
+#     MCU walk from subsampling loss.
+#
+# Scale shape: one Arrow-batched mapInPandas over documents, map-only —
+# no shuffle, no driver state; the per-asset codec cost is flat, exactly
+# the shape of a 100 TB crawl decode audit (multimodal/queries.py PNG
+# face precedent).
+
+def _gradient_rgb(doc_id: int, w: int, h: int):
+    """Deterministic smooth per-channel ramps (no clipping in range for
+    the fixture dims, so the pixel law is pure integer arithmetic)."""
+    import numpy as np
+
+    x = np.arange(w)[None, :]
+    y = np.arange(h)[:, None]
+    r = (doc_id % 97) + 2 * x + 3 * y
+    g = 230 - 2 * x - y - (doc_id % 53)
+    b = 30 + x + 2 * y + (doc_id % 31)
+    return (
+        np.stack(np.broadcast_arrays(r, g, b), axis=-1)
+        .astype(np.uint8)
+        .tobytes()
+    )
+
+
+@query(
+    "multimodal_decode_jpeg_variants",
+    oracle="""
+    SELECT doc_id AS asset_id,
+           CAST(14 + doc_id % 12 AS BIGINT) AS width,
+           CAST(14 + doc_id % 10 AS BIGINT) AS height,
+           TRUE AS sub_ok,
+           TRUE AS dri_exact,
+           TRUE AS chroma_const_exact
+    FROM documents
+    """,
+)
+def multimodal_decode_jpeg_variants(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Restart-interval + chroma-subsampling JPEG contract — see the notes
+    above.  Dims 14..25 x 14..23 give 2..4 x 2..3 MCUs at 4:4:4
+    (so interval 2 emits real RSTn markers) and 1..2 x 1..2 MCUs at
+    4:2:0 (interval 1 exercises the 16x16-MCU restart walk)."""
+
+    import pandas as pd
+
+    # ~75 s of intrinsic pure-Python JPEG codec work per sf0.1 pass rides
+    # this face; the input is 8 B/row of doc_id, so spreading it to
+    # executor parallelism is free and unserializes the decode
+    docs = scale_partitions(
+        load_table(spark, sf_dir, "documents").select("doc_id"), spark
+    )
+
+    def _audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        from vector_ai_npm_spark.multimodal.jpeg import (
+            decode_jpeg,
+            encode_jpeg,
+        )
+
+        def mae(a: bytes, b: bytes) -> float:
+            return float(
+                np.abs(
+                    np.frombuffer(a, np.uint8).astype(np.int64)
+                    - np.frombuffer(b, np.uint8).astype(np.int64)
+                ).mean()
+            )
+
+        for pdf in batches:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                w, h = 14 + did % 12, 14 + did % 10
+                pix = _gradient_rgb(did, w, h)
+
+                sub_ok = True
+                for sub in ((2, 2), (2, 1), (1, 2)):
+                    dw, dh, dec = decode_jpeg(
+                        encode_jpeg(w, h, pix, quality=92, subsampling=sub)
+                    )
+                    sub_ok = (
+                        sub_ok
+                        and (dw, dh) == (w, h)
+                        and mae(pix, dec) <= 4.0
+                    )
+
+                ref444 = decode_jpeg(encode_jpeg(w, h, pix, quality=92))[2]
+                ref420 = decode_jpeg(
+                    encode_jpeg(w, h, pix, quality=92, subsampling=(2, 2))
+                )[2]
+                dri_exact = (
+                    decode_jpeg(
+                        encode_jpeg(
+                            w, h, pix, quality=92, restart_interval=2
+                        )
+                    )[2]
+                    == ref444
+                    and decode_jpeg(
+                        encode_jpeg(
+                            w,
+                            h,
+                            pix,
+                            quality=92,
+                            subsampling=(2, 2),
+                            restart_interval=1,
+                        )
+                    )[2]
+                    == ref420
+                )
+
+                # gray RGB = zero chroma: 4:2:0 must equal 4:4:4 exactly
+                luma = np.frombuffer(pix, np.uint8).reshape(h, w, 3)[..., 0]
+                gray3 = (
+                    np.repeat(luma[..., None], 3, axis=-1)
+                    .astype(np.uint8)
+                    .tobytes()
+                )
+                chroma_const_exact = (
+                    decode_jpeg(
+                        encode_jpeg(
+                            w, h, gray3, quality=92, subsampling=(2, 2)
+                        )
+                    )[2]
+                    == decode_jpeg(encode_jpeg(w, h, gray3, quality=92))[2]
+                )
+
+                rows.append(
+                    (did, w, h, sub_ok, dri_exact, chroma_const_exact)
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "asset_id", "width", "height", "sub_ok", "dri_exact",
+                    "chroma_const_exact",
+                ],
+            )
+
+    return docs.mapInPandas(
+        _audit,
+        schema="asset_id long, width long, height long, sub_ok boolean, "
+        "dri_exact boolean, chroma_const_exact boolean",
+    ).select(
+        "asset_id", "width", "height", "sub_ok", "dri_exact",
+        "chroma_const_exact",
+    )
+
+
+@query(
+    "multimodal_decode_webp",
+    oracle="""
+    WITH m AS (
+      SELECT doc_id,
+             4 + CAST(doc_id % 5 AS INTEGER) AS w,
+             5 + CAST(doc_id % 3 AS INTEGER) AS h,
+             CASE CAST(doc_id % 3 AS INTEGER)
+               WHEN 0 THEN 4 WHEN 1 THEN 16 ELSE 64
+             END AS n_colors,
+             CAST(doc_id % 4 AS BIGINT) AS enc_path,
+             sha256(text) || sha256(text || 'w') || sha256(text || 'x')
+               || sha256(text || 'y') AS chain
+      FROM documents
+    )
+    SELECT doc_id AS asset_id,
+           CAST(w AS BIGINT) AS width,
+           CAST(h AS BIGINT) AS height,
+           enc_path,
+           ROUND(list_aggregate(
+                   list_transform(range(0, 3 * w * h), j ->
+                     unicode(substr(chain,
+                       3 * (unicode(substr(chain,
+                              192 + CAST(j // 3 AS INTEGER) + 1, 1))
+                            % n_colors)
+                       + CAST(j % 3 AS INTEGER) + 1, 1))),
+                   'avg'), 6) AS mean_pixel,
+           TRUE AS roundtrip_ok
+    FROM m
+    """,
+)
+def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wave 49: VP8L (WebP lossless) PIXEL decode — closes the WebP
+    half of the round-9 verdict's remaining codec seam (lossy VP8 stays
+    honestly gated on libwebp).
+
+    Per document the sha2-chain builds an n-color palette (n cycling
+    4/16/64 — 2-bit-bundled / 4-bit-bundled / unbundled color-indexing
+    widths) and a w×h index image, expanded to RGB and written as a
+    REAL lossless WebP via webp.encode_webp_lossless, with the encoder
+    path cycling by doc_id%4 so the corpus exercises every decoder
+    stage: 0 = COLOR_INDEXING (palette + pixel bundling), 1 =
+    SUBTRACT_GREEN + 4-bit color cache, 2 = PREDICTOR tiles + the
+    max_symbol shortcut, 3 = CROSS-COLOR tiles + two-group meta prefix
+    image + cache.  Decode goes back through the SHARED decode_pixels
+    route (RIFF dispatch → vp8l.decode_vp8l_chunk) and is compared
+    byte-for-byte against the palette expansion computed independently.
+
+    The oracle reconstructs the same expansion in DuckDB (unicode()
+    over the sha2 hex chain) and re-derives the mean pixel, so a prefix
+    -code, LZ77-distance, cache, transform, or bundling defect flips
+    mean_pixel or roundtrip_ok and fails the hash.
+
+    Scale shape: encode+decode ride one Arrow-batched mapInPandas; the
+    derived input frame crosses ONE bounded RoundRobin exchange
+    (~250 B/row — scale_partitions, r13); corpus text never shuffles."""
+    from vector_ai_npm_spark.multimodal.binary import decode_pixels
+    from vector_ai_npm_spark.multimodal.webp import encode_webp_lossless
+
+    docs = load_table(spark, sf_dir, "documents")
+    w = (F.lit(4) + F.col("doc_id") % 5).cast("int")
+    h = (F.lit(5) + F.col("doc_id") % 3).cast("int")
+    n_colors = F.element_at(
+        F.array(F.lit(4), F.lit(16), F.lit(64)),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    )
+    chain = F.concat(
+        F.sha2(F.col("text"), 256),
+        F.sha2(F.concat(F.col("text"), F.lit("w")), 256),
+        F.sha2(F.concat(F.col("text"), F.lit("x")), 256),
+        F.sha2(F.concat(F.col("text"), F.lit("y")), 256),
+    )
+    src = docs.select(
+        F.col("doc_id").alias("asset_id"),
+        w.alias("w"),
+        h.alias("h"),
+        n_colors.alias("n_colors"),
+        (F.col("doc_id") % 4).alias("enc_path"),
+        F.encode(
+            F.substring(chain, F.lit(1), F.lit(3) * n_colors), "utf-8"
+        ).alias("palette"),
+        F.encode(F.substring(chain, F.lit(193), w * h), "utf-8").alias(
+            "idx_raw"
+        ),
+    )
+    # The codec below is CPU-bound per row, not byte-bound: a byte-sized
+    # input split (one small parquet file here; a 128 MB blob split at
+    # scale) serializes minutes of encode+decode onto one core.  Spread
+    # to executor parallelism AFTER projecting away the corpus text —
+    # the exchange carries ~250 B/row of derived palette+index bytes
+    # (measured r13: 8.8 s single-core -> ~1 s across local[32]).
+    src = scale_partitions(src, spark)
+
+    _CONFIGS = (
+        dict(palette=True),
+        dict(subtract_green=True, cache_bits=4),
+        dict(predictor_bits=2, use_max_symbol=True),
+        dict(color_transform_bits=2, meta_bits=2, cache_bits=3),
+    )
+
+    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for aid, ww, hh, nc, path, pal, raw in zip(
+                pdf["asset_id"], pdf["w"], pdf["h"], pdf["n_colors"],
+                pdf["enc_path"], pdf["palette"], pdf["idx_raw"],
+            ):
+                pal, nc = bytes(pal), int(nc)
+                idx = bytes(b % nc for b in bytes(raw))
+                rgb = b"".join(pal[3 * i : 3 * i + 3] for i in idx)
+                webp = encode_webp_lossless(
+                    int(ww), int(hh), rgb, **_CONFIGS[int(path)]
+                )
+                dw, dh, dec = decode_pixels(webp)
+                rows.append(
+                    (
+                        int(aid), dw, dh, int(path),
+                        sum(dec) / len(dec),
+                        dec == rgb and (dw, dh) == (int(ww), int(hh)),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "asset_id", "width", "height", "enc_path",
+                    "mean_pixel", "roundtrip_ok",
+                ],
+            )
+
+    out = src.mapInPandas(
+        _roundtrip,
+        schema="asset_id long, width long, height long, enc_path long, "
+        "mean_pixel double, roundtrip_ok boolean",
+    )
+    return out.select(
+        "asset_id",
+        "width",
+        "height",
+        "enc_path",
+        F.round("mean_pixel", 6).alias("mean_pixel"),
+        "roundtrip_ok",
+    )

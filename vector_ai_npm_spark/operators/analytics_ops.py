@@ -10,6 +10,9 @@ feeds are), so they live in the north-star extension surface alongside
 Every operator is one or two keyed shuffles over the events feed — no
 driver-side loops, no cross products — and each docstring states the
 100 TB plan shape explicitly.
+
+Also here: `basket_itemsets_apriori`, with its notes in a comment above
+it.
 """
 
 from __future__ import annotations
@@ -1447,7 +1450,6 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     state O(p²), the right trade until p ~ thousands. Sums are exact
     decimal (order-independent), finishing arithmetic is IEEE double
     with operation order mirrored in the oracle."""
-    from vector_ai_npm_spark.functions.numeric import dsum
 
     li = load_table(spark, sf_dir, "lineitem")
     q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
@@ -1841,3 +1843,131 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value", "med", "mad",
         (F.col("d") > F.lit(3) * F.lit(1.4826) * F.col("mad")).alias("is_outlier"),
     )
+
+
+# `basket_itemsets_apriori` — frequent pattern mining, the operator
+# class the basket family stopped short of (`basket_lift` scores
+# PAIRS; recommendations/affinity analyses need k-itemsets): baskets
+# group once (collect_set per order), L1-infrequent items are pruned
+# INSIDE the basket array (the a-priori monotonicity step — a k-set
+# can only be frequent if every member is), then 2- and 3-subsets
+# expand INLINE from each pruned basket (combinations bounded by
+# basket size ≤ 13 here, and by the L1 prune generally — never a
+# corpus self-join) and count per itemset with one groupBy each.
+# A planted 3-item bundle rides every 50th order so the triple tier is
+# structurally non-empty on organic data; min support 3 keeps the
+# output analytic-sized.  Oracle reproduces the same expansion in SQL.
+#
+# Scale shapes: itemsets = two groupBys over inline-expanded bounded
+# arrays; CMS = built-in partial-merge aggregate, constant-size state.
+
+_MINSUP = 3
+_PLANT = (9000001, 9000002, 9000003)
+
+_O_BASKETS = f"""
+    raw AS (
+      SELECT l_orderkey AS o, CAST(l_partkey AS BIGINT) AS item
+      FROM lineitem
+      UNION ALL
+      SELECT l_orderkey, p.p
+      FROM (SELECT DISTINCT l_orderkey FROM lineitem
+            WHERE l_orderkey % 50 = 0) b
+      CROSS JOIN (VALUES ({_PLANT[0]}), ({_PLANT[1]}), ({_PLANT[2]}))
+        AS p(p)
+    ),
+    dedup AS (SELECT DISTINCT o, item FROM raw),
+    l1 AS (SELECT item FROM dedup GROUP BY item
+           HAVING COUNT(*) >= {_MINSUP}),
+    b AS (SELECT o, list_sort(list(item)) AS ps
+          FROM dedup JOIN l1 USING (item) GROUP BY o)
+"""
+
+
+@query(
+    "basket_itemsets_apriori",
+    oracle=f"""
+    WITH {_O_BASKETS},
+    pairs AS (
+      SELECT ps[i.i] AS i1, ps[j.j] AS i2
+      FROM b
+      CROSS JOIN UNNEST(range(1, len(ps) + 1)) AS i(i)
+      CROSS JOIN UNNEST(range(1, len(ps) + 1)) AS j(j)
+      WHERE i.i < j.j),
+    p2 AS (SELECT i1, i2, CAST(COUNT(*) AS BIGINT) AS support
+           FROM pairs GROUP BY 1, 2 HAVING COUNT(*) >= {_MINSUP}),
+    triples AS (
+      SELECT ps[i.i] AS i1, ps[j.j] AS i2, ps[k.k] AS i3
+      FROM b
+      CROSS JOIN UNNEST(range(1, len(ps) + 1)) AS i(i)
+      CROSS JOIN UNNEST(range(1, len(ps) + 1)) AS j(j)
+      CROSS JOIN UNNEST(range(1, len(ps) + 1)) AS k(k)
+      WHERE i.i < j.j AND j.j < k.k),
+    p3 AS (SELECT i1, i2, i3, CAST(COUNT(*) AS BIGINT) AS support
+           FROM triples GROUP BY 1, 2, 3 HAVING COUNT(*) >= {_MINSUP})
+    SELECT CAST(2 AS INTEGER) AS k, i1, i2,
+           CAST(NULL AS BIGINT) AS i3, support FROM p2
+    UNION ALL
+    SELECT 3, i1, i2, i3, support FROM p3
+    """,
+)
+def basket_itemsets_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent 2-/3-itemsets — see the notes above."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("o"),
+        F.col("l_partkey").cast("bigint").alias("item"),
+    )
+    planted = (
+        li.select("o")
+        .where(F.col("o") % 50 == 0)
+        .distinct()
+        .select("o", F.explode(F.array(*[F.lit(p) for p in _PLANT])).alias("item"))
+    )
+    dedup = li.unionByName(planted).distinct()
+    l1 = (
+        dedup.groupBy("item")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .where(F.col("c") >= _MINSUP)
+        .select("item")
+    )
+    baskets = (
+        dedup.join(l1, "item")
+        .groupBy("o")
+        .agg(F.array_sort(F.collect_set("item")).alias("ps"))
+    )
+    # inline k-subset expansion: bounded by (pruned basket size choose k)
+    pairs = baskets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ps, (x, i) -> "
+                "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS i1, y AS i2))))"
+            )
+        ).alias("p")
+    ).select("p.i1", "p.i2")
+    p2 = (
+        pairs.groupBy("i1", "i2")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
+        .where(F.col("support") >= _MINSUP)
+    )
+    triples = baskets.select(
+        F.explode(
+            F.expr(
+                "flatten(flatten(transform(ps, (x, i) -> "
+                "transform(slice(ps, i + 2, size(ps)), (y, j) -> "
+                "transform(slice(ps, i + j + 3, size(ps)), "
+                "z -> struct(x AS i1, y AS i2, z AS i3))))))"
+            )
+        ).alias("t")
+    ).select("t.i1", "t.i2", "t.i3")
+    p3 = (
+        triples.groupBy("i1", "i2", "i3")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
+        .where(F.col("support") >= _MINSUP)
+    )
+    two = p2.select(
+        F.lit(2).cast("int").alias("k"), "i1", "i2",
+        F.lit(None).cast("bigint").alias("i3"), "support",
+    )
+    three = p3.select(
+        F.lit(3).cast("int").alias("k"), "i1", "i2", "i3", "support"
+    )
+    return two.unionByName(three)

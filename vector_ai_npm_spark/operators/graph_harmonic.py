@@ -1,4 +1,4 @@
-"""Wave 31: sampled harmonic centrality.
+"""Sampled harmonic centrality over the co-purchase graph.
 
 `graph_harmonic_sampled` — per-node harmonic centrality estimated
 from k sampled sources (Boldi-Vigna 2014: h(v) = Σ_s 1/d(s, v), the
@@ -34,6 +34,7 @@ from vector_ai_npm_spark.operators.graph_ops import (
     _pagerank_sym_cached,
 )
 from vector_ai_npm_spark.registry import query
+
 
 _K_SOURCES = 5
 _ROUNDS = 3
@@ -87,7 +88,7 @@ def _o_harmonic_sql() -> str:
 
 @query("graph_harmonic_sampled", oracle=_o_harmonic_sql())
 def graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled harmonic centrality — see module docstring.  Sources'
+    """Sampled harmonic centrality — see the notes above.  Sources'
     own rows (dist 0) are excluded from their harmonic sums in both
     engines (WHERE dist > 0)."""
     sym = _pagerank_sym_cached(spark, sf_dir).select("node", "nbr")

@@ -1,4 +1,4 @@
-"""Wave 68: strongly connected components — the DIRECTED connectivity
+"""Strongly connected components — the DIRECTED connectivity
 class the graph suite was missing (components/k-core/k-truss/LPA are
 all undirected; pagerank/HITS use direction but never decompose it).
 
@@ -38,6 +38,18 @@ Scale shape: every round is an equi-join + groupBy-min on the edge
 relation (localCheckpoint per round caps lineage); rounds = diameter,
 phases = peeling depth.  No cartesian anywhere; the edge relation is
 the only corpus-sized frame.
+
+`graph_condensation` — the product SCC decomposition exists for:
+contract every edge to its (scc(src), scc(dst)) pair, drop
+self-pairs, and you get the condensation DAG that scheduling /
+reachability / cycle-debt analyses run on.  Per-SCC row: member
+count, condensation in/out degree, root/leaf flags.  On the planted
+cycle-group fixture the condensation is the group chain g → g+1,
+g → g+2, so every degree is closed-form — a wrong contraction
+(self-pair kept, duplicate condensation edge, SCC split upstream)
+moves a degree.  Scale: the
+condensation adds two scc-keyed joins + one distinct over edges on top
+of scc_colored's equi-join rounds.
 """
 
 from __future__ import annotations
@@ -212,7 +224,7 @@ def scc_colored(
     """,
 )
 def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCC over the planted cycle-group digraph — see module docstring.
+    """SCC over the planted cycle-group digraph — see the notes above.
     Groups of 10 ranked customers form 10-cycles (one SCC each; the
     last group wraps within its own, possibly smaller, size); chords
     r → r+10 (r % 10 = 3) and r → r+20 (r % 10 = 7) point strictly
@@ -246,4 +258,102 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scc.join(sizes, "scc_id").select(
         "node_id", F.col("scc_id").cast("bigint").alias("scc_id"), "scc_size"
+    )
+
+
+@query(
+    "graph_condensation",
+    oracle="""
+    WITH tot AS (SELECT COUNT(*) AS n FROM customer),
+    full_groups AS (
+      SELECT (SELECT n FROM tot) - (SELECT n FROM tot) % 10 AS fg
+    ),
+    sccs AS (
+      SELECT DISTINCT CASE WHEN c_custkey < (SELECT fg FROM full_groups)
+                           THEN c_custkey - c_custkey % 10
+                           ELSE c_custkey END AS scc_id,
+             CASE WHEN c_custkey < (SELECT fg FROM full_groups)
+                  THEN 10 ELSE 1 END AS scc_size
+      FROM customer
+    ),
+    g AS (SELECT scc_id, scc_size,
+                 scc_id // 10 AS gi,
+                 (SELECT fg FROM full_groups) // 10 AS ng,
+                 (SELECT n FROM tot) AS n
+          FROM sccs)
+    SELECT scc_id,
+           CAST(scc_size AS BIGINT) AS scc_size,
+           -- full groups: out to g+1/g+2 where those are full; tail
+           -- singletons: out to the next tail node (the in-group path)
+           CAST(CASE WHEN scc_size = 10 THEN
+                  (CASE WHEN gi + 1 < ng THEN 1 ELSE 0 END)
+                + (CASE WHEN gi + 2 < ng THEN 1 ELSE 0 END)
+                ELSE (CASE WHEN scc_id + 1 < n THEN 1 ELSE 0 END)
+                END AS BIGINT) AS out_deg,
+           CAST(CASE WHEN scc_size = 10 THEN
+                  (CASE WHEN gi >= 1 THEN 1 ELSE 0 END)
+                + (CASE WHEN gi >= 2 THEN 1 ELSE 0 END)
+                ELSE (CASE WHEN scc_id % 10 > 0 THEN 1 ELSE 0 END)
+                END AS BIGINT) AS in_deg
+    FROM g
+    """,
+)
+def graph_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Condensation DAG of the wave-68 fixture — see the notes above.
+    Tail singletons keep their in-group path edges (r → r+1), so their
+    degrees follow the path rule; chords are guarded to FULL-group
+    targets so the condensation between full groups stays the clean
+    g → g+1 / g → g+2 chain and tail nodes never receive chords."""
+
+    # the wave-68 fixture's cycle edges, chords guarded to full groups
+    cust = load_table(spark, sf_dir, "customer")
+    ranked = cust.select(F.col("c_custkey").alias("r"))
+    n = ranked.count()
+    fg = n - n % 10
+    nodes = ranked.select(F.col("r").alias("node_id"))
+    grp = F.col("r") - F.col("r") % 10
+    cycle = ranked.select(
+        F.col("r").alias("src"),
+        (grp + (F.col("r") % 10 + 1) % 10).alias("dst"),
+    )
+    chord1 = ranked.where((F.col("r") % 10 == 3) & (F.col("r") + 10 < fg)).select(
+        F.col("r").alias("src"), (F.col("r") + 10).alias("dst")
+    )
+    chord2 = ranked.where((F.col("r") % 10 == 7) & (F.col("r") + 20 < fg)).select(
+        F.col("r").alias("src"), (F.col("r") + 20).alias("dst")
+    )
+    edges = cycle.unionByName(chord1).unionByName(chord2)
+    scc = scc_colored(nodes, edges).localCheckpoint(eager=True)
+
+    live = edges.join(
+        scc.select(F.col("node_id").alias("src"), F.col("scc_id").alias("sa")),
+        "src",
+    ).join(
+        scc.select(F.col("node_id").alias("dst"), F.col("scc_id").alias("sb")),
+        "dst",
+    )
+    cond = (
+        live.where(F.col("sa") != F.col("sb"))
+        .select("sa", "sb")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    sizes = scc.groupBy("scc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("scc_size")
+    )
+    outd = cond.groupBy(F.col("sa").alias("scc_id")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("out_deg")
+    )
+    ind = cond.groupBy(F.col("sb").alias("scc_id")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("in_deg")
+    )
+    return (
+        sizes.join(outd, "scc_id", "left")
+        .join(ind, "scc_id", "left")
+        .select(
+            "scc_id",
+            "scc_size",
+            F.coalesce("out_deg", F.lit(0)).cast("bigint").alias("out_deg"),
+            F.coalesce("in_deg", F.lit(0)).cast("bigint").alias("in_deg"),
+        )
     )

@@ -21,6 +21,8 @@ Scale: the sketch aggregate is one map-side-combined pass with
 O(a·log n) state per group; the rank audit joins a |groups|-row
 broadcast back over one more scan.  (The audit is the TEST harness —
 production runs only the sketch pass.)
+
+Also here: `agg_count_min_sketch`, with its notes in a comment above it.
 """
 
 from __future__ import annotations
@@ -91,4 +93,87 @@ def agg_approx_percentile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         interval_ok("lt50", "le50", 0.5).alias("p50_rank_ok"),
         interval_ok("lt90", "le90", 0.9).alias("p90_rank_ok"),
+    )
+
+
+# `agg_count_min_sketch` — Spark's BUILT-IN `count_min_sketch`
+# aggregate (the JVM mergeable sketch, org.apache.spark.util.sketch)
+# as a first-class face: one-shot sketch over all events vs the MERGE
+# of four per-week sketches (the partial-aggregation contract that
+# makes sketches shuffle-constant at any corpus size), queried for 10
+# deterministic keys.  Pins per key: exact count, the CMS guarantee
+# est ≥ exact (never undercounts), a generous deterministic slack
+# bound (10× the eps·N theory bound — data is fixed per sf, so this
+# is a regression pin, not a probabilistic one), and merged ≡ one-shot
+# estimate equality (same seed ⇒ same hash rows ⇒ merge is cellwise
+# addition).  Sketch bytes stay KB-sized driver state.
+
+_CMS_KEYS = tuple(range(0, 100, 10))  # ten deterministic user_ids
+
+
+@query(
+    "agg_count_min_sketch",
+    oracle=f"""
+    WITH keys AS (
+      SELECT CAST(unnest([{", ".join(str(k) for k in _CMS_KEYS)}]) AS BIGINT)
+        AS key
+    ),
+    exact AS (
+      SELECT k.key, CAST(COUNT(e.user_id) AS BIGINT) AS exact_count
+      FROM keys k LEFT JOIN events e ON e.user_id = k.key
+      GROUP BY k.key
+    )
+    SELECT key, exact_count,
+           TRUE AS never_undercounts,
+           TRUE AS within_slack,
+           TRUE AS merge_equals_oneshot
+    FROM exact
+    """,
+)
+def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Built-in CMS one-shot vs merged-partials — see the notes above."""
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    eps, conf, seed = 0.0005, 0.99, 42
+    agg = f"count_min_sketch(user_id, {eps}d, {conf}d, {seed})"
+    one = ev.agg(F.expr(agg).alias("sk")).first()["sk"]
+    weekly = (
+        ev.groupBy(F.weekofyear("ts").alias("w"))
+        .agg(F.expr(agg).alias("sk"))
+        .collect()
+    )
+
+    jvm = spark._jvm
+    jio = jvm.java.io.ByteArrayInputStream
+
+    def load(b: bytes):
+        return jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+            jio(bytes(b))
+        )
+
+    oneshot = load(one)
+    merged = load(weekly[0]["sk"])
+    for row in weekly[1:]:
+        merged.mergeInPlace(load(row["sk"]))
+
+    n_total = ev.count()
+    slack = max(1, int(10 * eps * n_total))  # 10x the eps*N theory bound
+    exact = {
+        r["user_id"]: r["c"]
+        for r in ev.where(F.col("user_id").isin(*_CMS_KEYS))
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
+    }
+    rows = []
+    for k in _CMS_KEYS:
+        ex = int(exact.get(k, 0))
+        e1 = int(oneshot.estimateCount(k))
+        e2 = int(merged.estimateCount(k))
+        rows.append(
+            (k, ex, e1 >= ex, e1 <= ex + slack, e1 == e2)
+        )
+    return spark.createDataFrame(
+        rows,
+        "key long, exact_count long, never_undercounts boolean, "
+        "within_slack boolean, merge_equals_oneshot boolean",
     )

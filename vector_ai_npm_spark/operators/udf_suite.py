@@ -15,6 +15,8 @@ Scale ranking (why each shape exists):
     in memory; shuffle on the key, group must fit an executor.
   * UDTF (explode of array-returning UDF): row expansion with the array
     built Python-side, exploded JVM-side.
+
+Also here: `udf_grouped_agg`, with its notes in a comment above it.
 """
 
 from __future__ import annotations
@@ -226,4 +228,77 @@ def udf_mapinarrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mapped.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum("cents").alias("revenue_cents"),
+    )
+
+
+# `udf_grouped_agg` — the GROUPED_AGG pandas UDF face completing the
+# B29 UDF matrix (scalar / SCALAR pandas / applyInPandas grouped map /
+# UDTF / mapInArrow were covered; the Series→scalar aggregating
+# variant was not): a per-label custom aggregate (int64 dot of cents
+# against alternating ±1 signs — deterministic integer math, so the
+# face is hash-checkable, unlike a float mean whose pandas fold order
+# would be engine-specific).  Plan shape: Arrow-batched partial
+# aggregation (`AggregateInPandas`), shuffle carries per-group
+# partials only.
+
+@query(
+    "udf_grouped_agg",
+    oracle="""
+    WITH cents AS (
+      SELECT label,
+             CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 1000000 + 0.5)
+                  AS BIGINT) AS c,
+             ROW_NUMBER() OVER (PARTITION BY label ORDER BY vec_id)
+               AS rn
+      FROM embeddings
+    )
+    SELECT label,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CASE WHEN rn % 2 = 1 THEN c ELSE -c END) AS BIGINT)
+             AS signed_sum_micro
+    FROM cents GROUP BY label
+    """,
+)
+def udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUPED_AGG pandas UDF — see the notes above.  The custom
+    aggregate (alternating-sign int64 sum over the vec_id order) is
+    integer-exact and order-DEFINED, so the Python aggregation is
+    hash-checkable against a pure-SQL oracle; sorting happens inside
+    each Arrow batch group (per-label frames)."""
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    @pandas_udf("long")
+    def signed_sum(c: pd.Series, rn: pd.Series) -> int:
+        import numpy as np
+
+        cv = c.to_numpy(dtype="int64")
+        sign = np.where(rn.to_numpy(dtype="int64") % 2 == 1, 1, -1)
+        return int((cv * sign).sum())
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    from pyspark.sql import Window
+
+    cents = emb.select(
+        "label",
+        F.floor(
+            F.element_at("embedding", 1).cast("double") * 1_000_000
+            + F.lit(0.5)
+        )
+        .cast("bigint")
+        .alias("c"),
+        F.row_number()
+        .over(Window.partitionBy("label").orderBy("vec_id"))
+        .alias("rn"),
+    )
+    # Spark disallows mixing a GROUPED_AGG pandas UDF with non-pandas
+    # aggregates in one agg (INVALID_PANDAS_UDF_PLACEMENT) — join the
+    # plain count from its own label-keyed aggregate instead
+    sums = cents.groupBy("label").agg(
+        signed_sum("c", "rn").alias("signed_sum_micro")
+    )
+    counts = cents.groupBy("label").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    return counts.join(sums, "label").select(
+        "label", "n", "signed_sum_micro"
     )

@@ -11,16 +11,23 @@ DuckDB-oracle SQL string. The driver hash-compares the two at sf0.01
     functions.numeric)
   * results never rely on output order (the compare sorts)
 
-Register with the decorator::
+Register with the decorator, in any module of the package::
 
     @query("agg_groupby", oracle=\"\"\"SELECT ... FROM lineitem ...\"\"\")
     def agg_groupby(spark, sf_dir):
         ...
+
+There is no module list: :func:`_load_all_modules` imports the whole
+package, so a module registers its queries simply by living in it.
+:func:`all_queries` orders the result by driver history, ties by name.
 """
 
 from __future__ import annotations
 
+import functools
+import importlib
 import json
+import pkgutil
 import re
 from collections.abc import Callable
 from pathlib import Path
@@ -46,266 +53,20 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+@functools.cache
 def _load_all_modules() -> None:
-    """Import every module that registers queries (idempotent).
+    """Import every module of the package once (memoized).
 
-    Import order is the REGISTRATION order — the tiebreak within
-    :func:`all_queries`'s unverified-first rotation sort (the driver
-    checks only the first 50 returned queries per round).  Keeping the
-    reference-derived A-operators and LLM-pipeline modules first means
-    that among equally-unverified queries, the flagship operators win
-    window slots.
+    A module registers its queries simply by living in the package:
+    one ``pkgutil.walk_packages`` pass imports them all, so there is no
+    list to keep in step.  The walk order carries no meaning —
+    :func:`all_queries` orders ties by name, and a module that reads
+    another module's oracle at import time imports that module first.
     """
-    import vector_ai_npm_spark.chunking.queries  # noqa: F401
-    import vector_ai_npm_spark.embedding.queries  # noqa: F401
-    import vector_ai_npm_spark.retrieval.queries  # noqa: F401
-    import vector_ai_npm_spark.rag.queries  # noqa: F401
-    import vector_ai_npm_spark.dedup.queries  # noqa: F401
-    import vector_ai_npm_spark.clustering.queries  # noqa: F401
-    # graph suite imports inside the flagship zone: its queries are the
-    # round-5 new family, so among equally-unverified queries they win
-    # window slots ahead of the long-tail function suites
-    import vector_ai_npm_spark.operators.graph_ops  # noqa: F401
-    import vector_ai_npm_spark.text.queries  # noqa: F401
-    import vector_ai_npm_spark.text.curation  # noqa: F401
-    import vector_ai_npm_spark.streaming.queries  # noqa: F401
-    import vector_ai_npm_spark.multimodal.queries  # noqa: F401
-    import vector_ai_npm_spark.operators.pipeline_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.analytics_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.udf_suite  # noqa: F401
-    # --- end of the round-2 50-query driver window ---
-    import vector_ai_npm_spark.dedup.ann_queries  # noqa: F401
-    import vector_ai_npm_spark.operators.functions_suite  # noqa: F401
-    import vector_ai_npm_spark.operators.tpch_extra  # noqa: F401
-    import vector_ai_npm_spark.operators.scale_suite  # noqa: F401
-    import vector_ai_npm_spark.operators.relational  # noqa: F401
-    # --- round-7 wave: registered LAST so the tier-1 FIFO sort keeps
-    # the round-6 debt window (tests/test_registry_rotation.py
-    # ROUND6_DEBT) intact until its driver rows land ---
-    import vector_ai_npm_spark.operators.temporal_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.curation_dq  # noqa: F401
-    import vector_ai_npm_spark.text.collocations  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_kcore  # noqa: F401
-    import vector_ai_npm_spark.multimodal.phash  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_lpa  # noqa: F401
-    import vector_ai_npm_spark.retrieval.fusion  # noqa: F401
-    import vector_ai_npm_spark.operators.experiment_ops  # noqa: F401
-    import vector_ai_npm_spark.text.line_dedup  # noqa: F401
-    import vector_ai_npm_spark.text.bm25  # noqa: F401
-    import vector_ai_npm_spark.operators.eval_ops  # noqa: F401
-    import vector_ai_npm_spark.text.ppl_buckets  # noqa: F401
-    import vector_ai_npm_spark.operators.growth_ops  # noqa: F401
-    # --- round-8 wave: after the round-7 wave so the FIFO tiers keep
-    # earlier unverified queries ahead in the rotation ---
-    import vector_ai_npm_spark.operators.markov_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.interval_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.sampling_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_bfs  # noqa: F401
-    import vector_ai_npm_spark.retrieval.matryoshka  # noqa: F401
-    import vector_ai_npm_spark.retrieval.bitext  # noqa: F401
-    import vector_ai_npm_spark.operators.sink_ops  # noqa: F401
-    import vector_ai_npm_spark.text.kneser_ney  # noqa: F401
-    import vector_ai_npm_spark.text.rouge  # noqa: F401
-    import vector_ai_npm_spark.operators.attribution_ops  # noqa: F401
-    import vector_ai_npm_spark.text.rake  # noqa: F401
-    import vector_ai_npm_spark.operators.survival_ops  # noqa: F401
-    import vector_ai_npm_spark.dedup.calibration  # noqa: F401
-    # --- round-9 wave (added in round 7): after everything above so the
-    # tier-1 FIFO keeps the still-unverified round-6 additions fronted ---
-    import vector_ai_npm_spark.text.unigram_queries  # noqa: F401
-    import vector_ai_npm_spark.operators.web_curation  # noqa: F401
-    import vector_ai_npm_spark.operators.experiment_cuped  # noqa: F401
-    import vector_ai_npm_spark.operators.sketch_bounds  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_hits  # noqa: F401
-    import vector_ai_npm_spark.retrieval.sq  # noqa: F401
-    # --- wave 13 (round 7): eval/feature-engineering metrics ---
-    import vector_ai_npm_spark.operators.eval_metrics  # noqa: F401
-    # --- wave 14 (round 7): feature transforms, threshold evals,
-    # t-closeness ---
-    import vector_ai_npm_spark.operators.feature_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.privacy_ops  # noqa: F401
-    # --- wave 15 (round 7): corpus-level multimodal statistics ---
-    import vector_ai_npm_spark.multimodal.stats  # noqa: F401
-    # --- wave 16 (round 7): weighted quantiles, assortativity ---
-    import vector_ai_npm_spark.operators.weighted_quantile  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_assortativity  # noqa: F401
-    # --- wave 17 (round 8): OPQ rotation + agreement/calibration
-    # metrics, registered after everything above so the tier-1 FIFO
-    # keeps earlier unverified queries ahead ---
-    import vector_ai_npm_spark.retrieval.opq  # noqa: F401
-    import vector_ai_npm_spark.operators.agreement_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.linkpred_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.acf_ops  # noqa: F401
-    import vector_ai_npm_spark.operators.standardize_ops  # noqa: F401
-    import vector_ai_npm_spark.embedding.negatives  # noqa: F401
-    # --- wave 18 (round 8): reliability, Heaps, RA link scoring,
-    # intensity histogram — registered last, same FIFO reasoning ---
-    import vector_ai_npm_spark.operators.reliability_ops  # noqa: F401
-    import vector_ai_npm_spark.text.heaps  # noqa: F401
-    # --- wave 19 (round 8): retrieval MAP, binaryFile source, local
-    # clustering coefficient, Spearman — registered last (FIFO) ---
-    import vector_ai_npm_spark.retrieval.eval_map  # noqa: F401
-    import vector_ai_npm_spark.io.binary_source  # noqa: F401
-    import vector_ai_npm_spark.operators.graph_cc  # noqa: F401
-    import vector_ai_npm_spark.operators.spearman_ops  # noqa: F401
-    # --- wave 20 (round 8): gains/lift, HHI, Fano, lag features,
-    # lang-ID confusion, domain cap — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave20_ops  # noqa: F401
-    # --- wave 21 (round 8): TVD drift, time-decay attribution,
-    # readability, Gwet AC1, Gini impurity, peak detect — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave21_ops  # noqa: F401
-    # --- wave 22 (round 8): inter-arrival stats, DAU/MAU stickiness,
-    # audience overlap — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave22_ops  # noqa: F401
-    # --- wave 23 (round 8): centroid drift, vocabulary overlap —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave23_ops  # noqa: F401
-    # --- wave 24 (round 8): regression metrics, lateness profile —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave24_ops  # noqa: F401
-    # --- wave 25 (round 8): knn curve, repeat cohorts — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave25_ops  # noqa: F401
-    # --- wave 26 (round 8): decode quarantine — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.multimodal.quarantine  # noqa: F401
-    # --- wave 27 (round 8): recall curve, activity audit —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave27_ops  # noqa: F401
-    # --- wave 28 (round 8): IVF append, source-pair dup rate —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave28_ops  # noqa: F401
-    # --- wave 29 (round 8): streaming IVF ingest — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.streaming.ivf_ingest  # noqa: F401
-    # --- wave 30 (round 8): fairness AUC gap — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.operators.wave30_ops  # noqa: F401
-    # --- wave 31 (round 8): sampled harmonic centrality —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave31_ops  # noqa: F401
-    # --- wave 32 (round 9): WebP container audit — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.multimodal.webp_queries  # noqa: F401
-    # --- wave 33 (round 9): Kendall tau, seasonal MASE, bootstrap CI,
-    # Zipf ratios — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave33_ops  # noqa: F401
-    # --- wave 34 (round 9): binary quantization, late interaction,
-    # top-k coverage — registered last (FIFO) ---
-    import vector_ai_npm_spark.retrieval.wave34  # noqa: F401
-    # --- wave 35 (round 9): personalized PageRank — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.operators.graph_ppr  # noqa: F401
-    # --- wave 36 (round 9): GIF LZW codec — registered last (FIFO) ---
-    import vector_ai_npm_spark.multimodal.gif_queries  # noqa: F401
-    # --- wave 37 (round 9): schema drift, RBO, TIFF dims — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave37_ops  # noqa: F401
-    # --- wave 38 (round 9): grid-density clustering, streaming DLQ —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.clustering.density  # noqa: F401
-    import vector_ai_npm_spark.streaming.dlq  # noqa: F401
-    # --- wave 39 (round 9): SES forecast QA — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave39_ops  # noqa: F401
-    # --- wave 40 (round 9): crawl novelty, power analysis — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave40_ops  # noqa: F401
-    # --- wave 41 (round 9): IVF compaction contract — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.operators.wave41_ops  # noqa: F401
-    # --- wave 42 (round 9): corrupt-JSONL scan, grouped-agg UDF —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave42_ops  # noqa: F401
-    # --- wave 43 (round 9): IVF nlist tuning curve — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.operators.wave43_ops  # noqa: F401
-    # --- wave 45 (round 10): exact Kendall tau opt-in face —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave45_ops  # noqa: F401
-    # --- wave 46 (round 10): TIFF pixel decode — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.multimodal.tiff_queries  # noqa: F401
-    # --- wave 47 (round 10): progressive JPEG decode — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.multimodal.jpeg_progressive_queries  # noqa: F401
-    # --- wave 48 (round 10): kNN-graph ANN (NN-descent build + beam
-    # search) — registered last (FIFO) ---
-    import vector_ai_npm_spark.retrieval.knn_graph  # noqa: F401
-    # --- wave 50 (round 10): filtered ANN (predicate pushdown into the
-    # IVF probe), EXIF orientation audit — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave50_ops  # noqa: F401
-    # --- wave 51 (round 10): residual quantization, k-truss —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave51_ops  # noqa: F401
-    # --- wave 52 (round 10): PDF structure audit, gzip JSONL scan —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave52_ops  # noqa: F401
-    # --- wave 53 (round 10): left-outer stream join, CSV dialect
-    # sniffing — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave53_ops  # noqa: F401
-    # --- wave 54 (round 10): Spark 4 Python DataSource lifecycle —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave54_ops  # noqa: F401
-    # --- wave 55 (round 10): Holt trend forecast, APNG audit —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave55_ops  # noqa: F401
-    # --- wave 56 (round 10): IVF-RQ two-stage index — registered
-    # last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave56_ops  # noqa: F401
-    # --- wave 57 (round 10): streaming checkpoint restart —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave57_ops  # noqa: F401
-    # --- wave 58 (round 10): grid-cell spatial radius join, WAV
-    # audit — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave58_ops  # noqa: F401
-    # --- wave 59 (round 10): entity resolution — registered last
-    # (FIFO) ---
-    import vector_ai_npm_spark.operators.wave59_ops  # noqa: F401
-    # --- wave 60 (round 10): versioned-store time travel —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave60_ops  # noqa: F401
-    # --- wave 61 (round 10): XML ingest (source + xpath exprs) —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave61_ops  # noqa: F401
-    # --- wave 62 (round 10): cross-doc exact-substring dedup —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave62_ops  # noqa: F401
-    # --- wave 63 (round 10): MP4 box audit — registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave63_ops  # noqa: F401
-    # --- wave 64 (round 10): polymorphic (dynamic-schema) UDTF —
-    # registered last (FIFO) ---
-    import vector_ai_npm_spark.operators.wave64_ops  # noqa: F401
+    import vector_ai_npm_spark as pkg
 
-    # --- wave 65 (round 11): JPEG restart-interval + chroma-subsampling
-    # roundtrip contracts (r10 verdict item 3) ---
-    import vector_ai_npm_spark.operators.wave65_ops  # noqa: F401
-
-    # --- wave 66 (round 11): IVF tombstone delete + TABLE-argument UDTF ---
-    import vector_ai_npm_spark.operators.wave66_ops  # noqa: F401
-
-    # --- wave 67 (round 11): .npy tensor shards as source/sink ---
-    import vector_ai_npm_spark.operators.wave67_ops  # noqa: F401
-
-    # --- wave 68 (round 11): strongly connected components ---
-    import vector_ai_npm_spark.operators.wave68_ops  # noqa: F401
-
-    # --- wave 69 (round 11): SCD2 point-in-time join, watermark-bounded
-    # streaming dedup, incremental view maintenance ---
-    import vector_ai_npm_spark.operators.wave69_ops  # noqa: F401
-
-    # --- wave 70 (round 11): BLEU pair components + SCC condensation ---
-    import vector_ai_npm_spark.operators.wave70_ops  # noqa: F401
-
-    # --- wave 71 (round 11): manifest-CAS table log (ACID appends,
-    # optimistic replace, time travel) ---
-    import vector_ai_npm_spark.operators.wave71_ops  # noqa: F401
-
-    # --- wave 72 (round 11): frequent itemsets + count-min sketch ---
-    import vector_ai_npm_spark.operators.wave72_ops  # noqa: F401
-
-    # --- wave 73 (round 12): table-log checkpoints + banded LSH route ---
-    import vector_ai_npm_spark.operators.wave73_ops  # noqa: F401
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(info.name)
 
 
 def _driver_history() -> tuple[set[str], set[str], dict[str, int]]:
@@ -369,26 +130,26 @@ def all_queries() -> dict[str, QueryFn]:
     """All registered queries, least-driver-verified first.
 
     Order IS the driver's rotation schedule: the correctness driver
-    checks the first 50 entries per round, so a three-tier stable sort
+    checks the first 50 entries per round, so a three-tier sort
     (previously-failed, then never-attempted, then green) makes the
     window advance itself every round until every query has had a green
     driver row, while failures re-enter the very next window.
 
     Within the green tier the key is the round of the LAST green row,
     oldest first: once all queries are green the window doesn't freeze
-    on the first 50 registrations — it cycles through the whole registry
+    on the same 50 names — it cycles through the whole registry
     re-verifying the least-recently-checked queries each round, so a
     silent regression in a long-green suite surfaces within
-    ceil(n_queries/50) rounds.  Registration order breaks remaining
-    ties (Python's sort is stable).
+    ceil(n_queries/50) rounds.  The query name breaks remaining ties,
+    so the order never depends on which module registered first.
     """
     _load_all_modules()
     verified, attempted, last_green = _driver_history()
 
-    def key(name: str) -> tuple[int, int]:
+    def key(name: str) -> tuple[int, int, str]:
         if name in verified:
-            return (2, last_green.get(name, 0))
-        return ((0, 0) if name in attempted else (1, 0))
+            return (2, last_green.get(name, 0), name)
+        return (0 if name in attempted else 1, 0, name)
 
     names = sorted(_QUERIES, key=key)
     return {n: _QUERIES[n] for n in names}

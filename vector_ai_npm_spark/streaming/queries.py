@@ -1,10 +1,16 @@
 """Registry entries for streaming-shaped operators (B25–B28), run in
 batch mode for the oracle; tests/test_streaming.py re-runs the same
-transforms under readStream and asserts equality."""
+transforms under readStream and asserts equality.
+
+Also here: `stream_join_left_outer`, `stream_checkpoint_restart`,
+`join_temporal_validity`, `stream_dedup_within_watermark`,
+`ivm_incremental_agg`, each with its notes in a comment above it.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.io.sources import load_table
 from vector_ai_npm_spark.registry import query
@@ -142,7 +148,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-decimal sum for the oracle hash); the applyInPandasWithState
     streaming face is exercised in tests/test_streaming.py and must
     converge to these same totals."""
-    from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
@@ -294,7 +299,6 @@ def stream_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
     finally:
         q.stop()
-    from pyspark.sql import functions as F
 
     final = (
         spark.table(qname)
@@ -413,3 +417,391 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events"), width="5 minutes"
     ).select("window_start", "event_type", "n_events")
     return topk_event_types(counts, k=3)
+
+
+# `stream_join_left_outer` — the outer half of the B26 interval-join
+# pair: every click with its within-window purchase OR a NULL verdict.
+# Inner joins emit on match; outer joins are a STATE-EVICTION
+# contract (a row's null verdict exists only because the watermark
+# proved no match can arrive), which is why the face is worth its own
+# oracle.  Batch face here; the real double-watermarked stream with a
+# watermark-flush sentinel runs in tests/test_streaming.py.
+
+@query(
+    "stream_join_left_outer",
+    oracle="""
+    SELECT c.event_id AS click_id, p.event_id AS purchase_id,
+           c.user_id, c.ts AS click_ts, p.ts AS purchase_ts,
+           p.value AS amount
+    FROM (SELECT * FROM events WHERE event_type = 'click') c
+    LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
+      ON c.user_id = p.user_id
+     AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 4 HOUR
+    """,
+)
+def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Left-outer click→purchase attribution — see the notes above and
+    streaming.joins.attribute_clicks_left_outer."""
+    from vector_ai_npm_spark.streaming.joins import (
+        attribute_clicks_left_outer,
+        split_clicks_purchases,
+    )
+
+    clicks, purchases = split_clicks_purchases(
+        load_table(spark, sf_dir, "events")
+    )
+    return attribute_clicks_left_outer(clicks, purchases)
+
+
+# Every streaming face so far ran inside one query lifetime; the
+# operational contract that matters in production is the RESTART: a new
+# query object pointed at the SAME checkpoint must resume from the
+# source offsets the previous run committed — new input processes, old
+# input does not, and the store converges to the one-shot batch answer
+# bit-for-bit.  This face runs the versioned upsert merge
+# (streaming/sinks.py — the at-least-once-idempotent foreachBatch
+# design) through TWO availableNow query lifetimes with an input append
+# between them, then pins:
+#
+# * run 1 published exactly one store version per input file (4);
+# * the restarted run published exactly the NEW files' versions (2),
+#     ids CONTINUING the committed batch sequence — i.e. zero
+#     reprocessing: the checkpoint, not the input listing, decided what
+#     to read;
+# * final per-user totals hash-equal the one-shot SQL aggregate over
+#     ALL events (the exact-decimal state discipline).
+
+_RUN1_FILES = 4
+_RUN2_FILES = 2
+
+
+@query(
+    "stream_checkpoint_restart",
+    oracle=f"""
+    SELECT user_id,
+           CAST(CAST(CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DECIMAL(38,8))
+                AS VARCHAR) AS DOUBLE) AS total_value,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST({_RUN1_FILES} AS BIGINT) AS run1_batches,
+           CAST({_RUN2_FILES} AS BIGINT) AS resumed_batches,
+           TRUE AS no_reprocess
+    FROM events
+    GROUP BY user_id
+    """,
+)
+def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-lifetime restart face — see the notes above.  Events split
+    at the median timestamp: era 1 streams first (4 files → versions
+    0-3), the query TERMINATES, era 2 lands in the input dir, and a
+    brand-new query on the same checkpoint resumes (2 files → versions
+    4-5 exactly).  no_reprocess derives from the published version ids
+    themselves — any re-read of era-1 files would mint extra versions
+    or shift the resumed ids and flip the booleans/hash."""
+    import tempfile
+
+    from vector_ai_npm_spark.streaming.sinks import (
+        _store_versions,
+        final_totals,
+        run_upsert_stream,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select("user_id", "value", "ts")
+    cut = ev.agg(
+        F.expr("percentile(unix_micros(CAST(ts AS TIMESTAMP)), 0.5)")
+    ).first()[0]
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    base = tempfile.mkdtemp(prefix="ckpt_restart_")
+    ind, store, ckpt = f"{base}/in", f"{base}/store", f"{base}/ckpt"
+    ev.where(us <= cut).select("user_id", "value").repartition(
+        _RUN1_FILES
+    ).write.parquet(ind)
+    run_upsert_stream(spark, ind, store, ckpt)
+    v1 = _store_versions(store)
+    ev.where(us > cut).select("user_id", "value").repartition(
+        _RUN2_FILES
+    ).write.mode("append").parquet(ind)
+    run_upsert_stream(spark, ind, store, ckpt)
+    v2 = _store_versions(store)
+    resumed = [v for v in v2 if v not in v1]
+    no_reprocess = (
+        len(v1) == _RUN1_FILES
+        and len(resumed) == _RUN2_FILES
+        and min(resumed) == max(v1) + 1
+    )
+    return final_totals(spark, store).select(
+        "user_id",
+        "total_value",
+        "n_events",
+        F.lit(len(v1)).cast("bigint").alias("run1_batches"),
+        F.lit(len(resumed)).cast("bigint").alias("resumed_batches"),
+        F.lit(bool(no_reprocess)).alias("no_reprocess"),
+    )
+
+
+# `join_temporal_validity` — the warehouse pattern CDC produces and
+# every fact query consumes: join facts to the dimension VERSION that
+# was valid at the fact's event time (`key equal AND valid_from <= ts
+# < valid_to`, open versions NULL-terminated).  The dimension here is
+# a two-version SCD2 built from customer (v1 from epoch, v2 from
+# 2024-01-15 with shifted balance), so every event before/after the
+# cut must pick the right balance — an off-by-one on either interval
+# edge moves rows between versions and flips the hash.  Plan shape:
+# equi-join on the key with the validity predicate as a post-filter
+# (versions per key are few — bounded fan-out, no range explosion).
+#
+# Scale shapes: validity join = one equi-join; the stream face is
+# bounded-state by construction; IVM = delta-sized agg + keyed merge.
+
+_CUT = "TIMESTAMP '2024-01-15 00:00:00'"
+
+
+@query(
+    "join_temporal_validity",
+    oracle=f"""
+    WITH dim AS (
+      SELECT c_custkey, c_acctbal, c_mktsegment,
+             TIMESTAMP '2020-01-01 00:00:00' AS valid_from,
+             {_CUT} AS valid_to
+      FROM customer
+      UNION ALL
+      SELECT c_custkey, c_acctbal + 100.0, c_mktsegment,
+             {_CUT}, CAST(NULL AS TIMESTAMP)
+      FROM customer
+    )
+    SELECT e.event_id, e.user_id, e.ts,
+           d.c_acctbal AS bal_at_event,
+           d.c_mktsegment AS segment,
+           e.ts >= {_CUT} AS after_cut
+    FROM events e
+    JOIN dim d
+      ON e.user_id = d.c_custkey
+     AND e.ts >= d.valid_from
+     AND (d.valid_to IS NULL OR e.ts < d.valid_to)
+    """,
+)
+def join_temporal_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time SCD2 join — see the notes above."""
+    cut = F.expr(_CUT)
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal", "c_mktsegment"
+    )
+    v1 = cust.select(
+        "c_custkey", "c_acctbal", "c_mktsegment",
+        F.expr("TIMESTAMP '2020-01-01 00:00:00'").alias("valid_from"),
+        cut.alias("valid_to"),
+    )
+    v2 = cust.select(
+        "c_custkey",
+        (F.col("c_acctbal") + 100.0).alias("c_acctbal"),
+        "c_mktsegment",
+        cut.alias("valid_from"),
+        F.lit(None).cast("timestamp").alias("valid_to"),
+    )
+    dim = v1.unionByName(v2)
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts"
+    )
+    return (
+        ev.join(dim, ev.user_id == dim.c_custkey)
+        .where(
+            (F.col("ts") >= F.col("valid_from"))
+            & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to")))
+        )
+        .select(
+            "event_id", "user_id", "ts",
+            F.col("c_acctbal").alias("bal_at_event"),
+            F.col("c_mktsegment").alias("segment"),
+            (F.col("ts") >= cut).alias("after_cut"),
+        )
+    )
+
+
+# `stream_dedup_within_watermark` — the Spark 3.5+
+# dropDuplicatesWithinWatermark operator end-to-end: events are
+# DOUBLED (every event_id delivered twice) and tailed through a real
+# availableNow stream; state for an id is dropped once the watermark
+# passes its event time, which is exactly the bounded-state contract
+# an unbounded-key dedup needs at 100 TB (plain dropDuplicates state
+# grows forever).  The planted duplicates share their original's
+# timestamp, so all fall inside the watermark and the survivors must
+# equal the events table exactly.
+
+@query(
+    "stream_dedup_within_watermark",
+    oracle="""
+    SELECT event_id, user_id,
+           CAST(value AS DOUBLE) AS value
+    FROM events
+    """,
+)
+def stream_dedup_within_watermark(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """dropDuplicatesWithinWatermark over doubled events — see the notes
+    above.  A real availableNow stream (one file per trigger);
+    survivors append to parquet via foreachBatch and must equal the
+    events table row-for-row."""
+    import tempfile
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        # watermarks require TIMESTAMP (with local tz); the fixture's
+        # ns-precision column loads as TIMESTAMP_NTZ
+        F.col("ts").cast("timestamp").alias("ts"),
+        "user_id",
+        "value",
+    )
+    doubled = ev.unionByName(ev)
+    base = tempfile.mkdtemp(prefix="ddww_")
+    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
+    # One file per ts WEEK, written SEQUENTIALLY in ascending order:
+    # (a) both copies of an event share its timestamp, so week files
+    #     co-locate them in one trigger batch — the duplicate can never
+    #     arrive after the watermark expired its state;
+    # (b) FileStreamSource orders files by MODIFICATION TIME, so the
+    #     sequential writes guarantee ascending event-time arrival —
+    #     a single range-partitioned parallel write can finish its
+    #     part files out of order, and a whole older-ts file arriving
+    #     after a newer one would be dropped as late data (observed:
+    #     240 events silently vanished that way).
+    #     Arrival order is made STRUCTURAL, not timing-based: after
+    #     each week file lands, its parts' mtimes are bumped with
+    #     os.utime until they strictly exceed every prior file's —
+    #     immune to coarse fs mtime granularity and clock jitter
+    #     (a fixed sleep is not: a 1s-granularity fs can tie or
+    #     invert two files written 50ms apart).
+    import os as _os
+
+    seen: set[str] = set()
+
+    def _bump_past(dir_path: str, floor_ns: int) -> int:
+        """Ensure every NEW data file under dir_path (not bumped by a
+        prior call) has mtime > floor_ns; returns the new max mtime_ns."""
+        hi = floor_ns
+        for name in sorted(_os.listdir(dir_path)):
+            if name.startswith((".", "_")) or name in seen:
+                continue
+            seen.add(name)
+            p = _os.path.join(dir_path, name)
+            st = _os.stat(p)
+            m = st.st_mtime_ns
+            if m <= floor_ns:
+                m = floor_ns + 1_000_000  # +1ms, strictly later
+                _os.utime(p, ns=(st.st_atime_ns, m))
+            hi = max(hi, m)
+        return hi
+
+    cuts = [
+        "2023-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2026-01-01",
+    ]
+    last_mtime_ns = 0
+    for lo, hi in zip(cuts, cuts[1:]):
+        (
+            doubled.where(
+                (F.col("ts") >= F.lit(lo).cast("timestamp"))
+                & (F.col("ts") < F.lit(hi).cast("timestamp"))
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(in_dir)
+        )
+        last_mtime_ns = _bump_past(in_dir, last_mtime_ns)
+
+    schema = spark.read.parquet(in_dir).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda b, i: b.write.mode("append").parquet(out_dir)
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(out_dir).select(
+        "event_id", "user_id", F.col("value").cast("double").alias("value")
+    )
+
+
+# `ivm_incremental_agg` — incremental view maintenance: a per-user
+# (count, exact-decimal sum) view maintained under a change batch
+# (inserts + deletes) WITHOUT rescanning the base: deltas carry signed
+# weights (+1 insert, −1 delete), aggregate alone, and full-outer
+# merge into the view (groups whose count reaches 0 drop out).  The
+# oracle recomputes the view from scratch on (base ∪ inserts −
+# deletes), so any signed-merge slip — double-counting, wrong NULL
+# handling on new/vanished groups, float drift in the retraction —
+# is a hash mismatch.  This is the Flink/Materialize retraction
+# pattern on Spark frames; at 100 TB the delta pass touches only the
+# change batch.
+
+@query(
+    "ivm_incremental_agg",
+    oracle="""
+    WITH effective AS (
+      SELECT user_id, value FROM events WHERE event_id % 13 <> 0
+      UNION ALL
+      SELECT user_id, value + 1.0 FROM events WHERE event_id % 5 = 0
+    )
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(CAST(CAST(SUM(CAST(value AS DECIMAL(30,8)))
+                AS DECIMAL(38,8)) AS VARCHAR) AS DOUBLE) AS total_value
+    FROM effective
+    GROUP BY user_id
+    """,
+)
+def ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signed-delta view maintenance — see the notes above.  The
+    maintained view (base view ⊕ delta aggregate) must hash-equal the
+    oracle's from-scratch recompute; exact-decimal state makes the
+    retraction arithmetic order-independent."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "value"
+    )
+    dec = F.col("value").cast("decimal(30,8)")
+
+    # the standing view over the base corpus (computed once, reused)
+    view = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(dec).cast("decimal(38,8)").alias("s"),
+    )
+
+    # change batch: retract event_id % 13 == 0, insert value+1 rows for
+    # event_id % 5 == 0 — signed weights, aggregated ALONE (delta-sized)
+    deletes = ev.where(F.col("event_id") % 13 == 0).select(
+        "user_id", F.lit(-1).alias("w"), (-dec).alias("v")
+    )
+    inserts = ev.where(F.col("event_id") % 5 == 0).select(
+        "user_id",
+        F.lit(1).alias("w"),
+        (F.col("value") + 1.0).cast("decimal(30,8)").alias("v"),
+    )
+    delta = (
+        deletes.unionByName(inserts)
+        .groupBy("user_id")
+        .agg(
+            F.sum("w").cast("bigint").alias("dn"),
+            F.sum("v").cast("decimal(38,8)").alias("ds"),
+        )
+    )
+
+    merged = view.join(delta, "user_id", "full_outer").select(
+        "user_id",
+        (F.coalesce("n", F.lit(0)) + F.coalesce("dn", F.lit(0))).alias("n"),
+        (
+            F.coalesce(F.col("s"), F.lit(0).cast("decimal(38,8)"))
+            + F.coalesce(F.col("ds"), F.lit(0).cast("decimal(38,8)"))
+        ).alias("s"),
+    )
+    return merged.where(F.col("n") > 0).select(
+        "user_id",
+        F.col("n").alias("n_events"),
+        F.col("s").cast("decimal(38,8)").cast("double").alias("total_value"),
+    )

@@ -12,6 +12,9 @@ Every operator is a map-only pass or a single window/agg keyed by
 ``doc_id``/``source`` — no self-joins, no driver collection — so each
 holds at 100 TB: cost is one scan plus (at most) one hash shuffle whose
 key cardinality grows with the data.
+
+Also here: `curate_domain_cap`, `text_ngram_novelty`, each with its
+notes in a comment above it.
 """
 
 from __future__ import annotations
@@ -20,6 +23,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.io.sources import load_table
+from vector_ai_npm_spark.operators.eval_metrics import (
+    _duck_hash_mod,
+    _spark_hash_mod,
+)
 from vector_ai_npm_spark.registry import query
 from vector_ai_npm_spark.text.queries import _DUCK_TOKS, _SPARK_TOKS
 
@@ -477,7 +484,6 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tf aggregate, not a re-aggregation of raw tokens; the final
     doc-keyed aggregate folds Σtf, Σtf·df, min df. Shuffles touch only
     the (doc, tok, tf) aggregate — never the raw token stream twice."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
@@ -1172,4 +1178,148 @@ def curate_dsir_select_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.col("q3")
         ).cast("long").alias("affinity_e18"),
         F.col("rank").cast("long").alias("rank"),
+    )
+
+
+# `curate_domain_cap` — per-source document cap (md5-rank
+# deterministic): down-samples dominant sources to ≤ cap docs — the
+# domain-balancing half of `curate_mix_temperature`, as selection
+# rather than quota computation.
+
+_DOMAIN_CAP = 30
+
+
+@query(
+    "curate_domain_cap",
+    oracle=f"""
+    WITH ranked AS (
+      SELECT doc_id, source,
+             ROW_NUMBER() OVER (
+               PARTITION BY source
+               ORDER BY md5(CAST(doc_id AS VARCHAR) || '#cap'), doc_id
+             ) AS pick_rank,
+             CAST(COUNT(*) OVER (PARTITION BY source) AS BIGINT)
+               AS source_total
+      FROM documents
+    )
+    SELECT doc_id, source, CAST(pick_rank AS BIGINT) AS pick_rank,
+           source_total, source_total > {_DOMAIN_CAP} AS was_capped
+    FROM ranked WHERE pick_rank <= {_DOMAIN_CAP}
+    """,
+)
+def curate_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source document cap at {_DOMAIN_CAP} — see the notes
+    above.  The md5 pick order is seedless and
+    partitioning-stable (the sampling-family idiom), so the KEPT SET
+    is deterministic; the per-source rank is a keyed window
+    (WindowGroupLimit prunes at the cap)."""
+    docs = load_table(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#cap"))),
+        F.col("doc_id"),
+    )
+    wtot = Window.partitionBy("source")
+    ranked = docs.select(
+        "doc_id",
+        "source",
+        F.row_number().over(w).cast("bigint").alias("pick_rank"),
+        F.count(F.lit(1)).over(wtot).cast("bigint").alias("source_total"),
+    )
+    return ranked.where(F.col("pick_rank") <= _DOMAIN_CAP).select(
+        "doc_id",
+        "source",
+        "pick_rank",
+        "source_total",
+        (F.col("source_total") > _DOMAIN_CAP).alias("was_capped"),
+    )
+
+
+# `text_ngram_novelty` — the incremental-corpus freshness QA: split
+# documents into two md5 crawl epochs (yesterday / today) and measure
+# what fraction of today's distinct 8-grams are NEW (absent from
+# yesterday) — the number that tells a training-data pipeline whether
+# a recrawl is adding content or re-downloading the web it already
+# has.  Reuses the decontamination 8-gram machinery
+# (text/curation.py): gram frames are doc-distinct TYPE-level sets,
+# the anti-join runs gram-keyed, and every output is a distinct count
+# — output-bounded at any corpus size.
+
+# --------------------------------------------------------------------------
+# text_ngram_novelty
+# --------------------------------------------------------------------------
+
+
+@query(
+    "text_ngram_novelty",
+    oracle=f"""
+    WITH tagged AS (
+      SELECT doc_id, text,
+             {_duck_hash_mod("doc_id", "#crawl", 2)} AS epoch
+      FROM documents
+    ),
+    grams AS (
+      SELECT DISTINCT epoch, unnest({_DUCK_8GRAMS}) AS gram FROM tagged
+    ),
+    a AS (SELECT gram FROM grams WHERE epoch = 0),
+    b AS (SELECT gram FROM grams WHERE epoch = 1),
+    new_b AS (SELECT gram FROM b ANTI JOIN a USING (gram))
+    SELECT
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM tagged WHERE epoch = 0)
+        AS n_docs_a,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM tagged WHERE epoch = 1)
+        AS n_docs_b,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM a) AS n_grams_a,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM b) AS n_grams_b,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM new_b) AS n_new_in_b,
+      CAST((SELECT COUNT(*) FROM new_b) AS DOUBLE)
+        / CAST((SELECT COUNT(*) FROM b) AS DOUBLE) AS novelty_rate
+    """,
+)
+def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Epoch-over-epoch 8-gram novelty — see the notes above."""
+    docs = load_table(spark, sf_dir, "documents")
+    tagged = docs.select(
+        "doc_id", "text",
+        _spark_hash_mod(F.col("doc_id"), "#crawl", 2).alias("epoch"),
+    ).localCheckpoint(eager=True)  # consumed by both epoch legs + counts
+    grams = (
+        tagged.select(
+            "epoch", F.explode(F.expr(_SPARK_8GRAMS)).alias("gram")
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    a = grams.where(F.col("epoch") == 0).select("gram")
+    b = grams.where(F.col("epoch") == 1).select("gram")
+    new_b = b.join(a, "gram", "left_anti")
+    docs_cnt = tagged.agg(
+        F.sum(F.when(F.col("epoch") == 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_docs_a"),
+        F.sum(F.when(F.col("epoch") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_docs_b"),
+    )
+    gram_cnt = grams.agg(
+        F.sum(F.when(F.col("epoch") == 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_grams_a"),
+        F.sum(F.when(F.col("epoch") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_grams_b"),
+    )
+    new_cnt = new_b.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_new_in_b")
+    )
+    return (
+        docs_cnt.crossJoin(F.broadcast(gram_cnt))
+        .crossJoin(F.broadcast(new_cnt))
+        .select(
+            "n_docs_a", "n_docs_b", "n_grams_a", "n_grams_b",
+            "n_new_in_b",
+            (
+                F.col("n_new_in_b").cast("double")
+                / F.col("n_grams_b").cast("double")
+            ).alias("novelty_rate"),
+        )
     )

@@ -35,6 +35,9 @@ per pair the expected collision count is zero for any corpus that fits
 on Earth, and the narrow shuffle it buys is the whole scale design.
 Paranoid deployments can widen the key to (length(line), md5(line))
 for free — length is already computed map-side.
+
+Also here: `dedup_exact_substring`, with its notes in a comment above
+it.
 """
 
 from __future__ import annotations
@@ -154,4 +157,69 @@ def curate_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_lines", z).alias("n_lines"),
         F.coalesce("n_kept", z).alias("n_kept"),
         F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+    )
+
+
+# Distributed shape (the suffix-array intent without the suffix array):
+#
+# 1. every document emits its 40-char gram fingerprints (md5), all
+#      positions — O(chars) work, map-side;
+# 2. CONTENT-DEFINED sampling keeps grams whose hash starts '0'
+#      (1/16): because selection depends only on gram CONTENT, two
+#      documents sharing a run select the SAME grams regardless of
+#      alignment — the winnowing/CDC idea, which is what makes a
+#      strided sample wrong here and this one right;
+# 3. inverted-index bucket join on the fingerprint (the dedup
+#      family's no-cross-product discipline), doc_a < doc_b, per-pair
+#      shared-gram counts.
+#
+# A shared run of R chars contains R−39 grams, ~(R−39)/16 selected, so
+# detection is content-deterministic (both engines compute the same
+# md5s) and recall grows with run length — the knob is the sampling
+# prefix, documented, not hidden.  At 100 TB: gram emission is map-side
+# (corpus text never shuffles — only 32-hex fingerprints do), the join
+# is hash-bucketed, output is overlap-bound.
+
+@query(
+    "dedup_exact_substring",
+    oracle="""
+    WITH grams AS (
+      SELECT doc_id,
+             unnest(list_transform(
+               range(1, GREATEST(length(text) - 39, 1)::INTEGER + 1),
+               i -> md5(substr(text, i::INTEGER, 40)))) AS fp
+      FROM documents
+    ), sel AS (
+      SELECT DISTINCT doc_id, fp FROM grams WHERE substr(fp, 1, 1) = '0'
+    )
+    SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
+           CAST(COUNT(*) AS BIGINT) AS n_shared_grams
+    FROM sel a JOIN sel b ON a.fp = b.fp AND a.doc_id < b.doc_id
+    GROUP BY 1, 2
+    """,
+)
+def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact shared-substring pairs — see the notes above.  Everything
+    stays JVM-side: gram generation is transform(sequence(...)) inside
+    codegen, fingerprints are md5 (identical hex in both engines), the
+    pair join is fingerprint-keyed."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    grams = docs.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(1, "
+                "int(greatest(length(text) - 39, 1))), "
+                "i -> md5(substr(text, i, 40)))"
+            )
+        ).alias("fp"),
+    )
+    sel = grams.where(F.substring("fp", 1, 1) == "0").distinct()
+    a = sel.select(F.col("doc_id").alias("doc_id_a"), "fp")
+    b = sel.select(F.col("doc_id").alias("doc_id_b"), "fp")
+    return (
+        a.join(b, "fp")
+        .where(F.col("doc_id_a") < F.col("doc_id_b"))
+        .groupBy("doc_id_a", "doc_id_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_grams"))
     )

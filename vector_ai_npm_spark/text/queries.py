@@ -4,6 +4,10 @@ All five operators are pure JVM expressions (split / regexp /
 higher-order folds) — no UDFs, no shuffles except text_stats' group-by.
 These are the per-document scoring passes a 100 TB training-data
 pipeline runs as map-only stages before filtering/sampling.
+
+Also here: `text_langid_confusion`, `text_readability`,
+`text_vocab_overlap`, `text_zipf_ratio`, each with its notes in a
+comment above it.
 """
 
 from __future__ import annotations
@@ -234,7 +238,6 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabularies at scale. Map-side combine collapses the exploded
     tokens before the shuffle; WindowGroupLimit bounds the ranking."""
     docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
 
     counts = (
         docs.select("lang", F.explode(F.expr(_SPARK_TOKS)).alias("tok"))
@@ -781,4 +784,318 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("fertility"),
         (F.sum("n_chars").cast("double") / F.sum("bpe").cast("double"))
         .alias("chars_per_token"),
+    )
+
+
+# `text_langid_confusion` — declared-vs-predicted language confusion
+# matrix over the deterministic stopword lang-ID: the QA readout that
+# decides whether the lang-ID gate is trustworthy per slice.
+
+@query(
+    "text_langid_confusion",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, lang, {_DUCK_TOKS} AS toks FROM documents),
+    pred AS (
+      SELECT lang AS labeled_lang,
+             {_argmax_case({l: _score_sql(l, 'toks') for l in _LANG_ORDER})}
+               AS predicted_lang
+      FROM t
+    ),
+    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM pred)
+    SELECT labeled_lang, predicted_lang,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           labeled_lang = predicted_lang AS is_correct,
+           CAST(COUNT(*) AS DOUBLE) / CAST(ANY_VALUE(t2.n_docs) AS DOUBLE)
+             AS share
+    FROM pred CROSS JOIN tot t2
+    GROUP BY labeled_lang, predicted_lang
+    """,
+)
+def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declared-vs-predicted language confusion matrix — see the notes
+    above.  Corpus reduces to the ≤|langs|² matrix in one
+    aggregate; the total attaches as a broadcast scalar."""
+    docs = load_table(spark, sf_dir, "documents")
+    scores = {l: _score_spark(l) for l in _LANG_ORDER}
+    pred = docs.select(
+        F.col("lang").alias("labeled_lang"),
+        F.expr(_argmax_case(scores)).alias("predicted_lang"),
+    )
+    tot = pred.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    return (
+        pred.groupBy("labeled_lang", "predicted_lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "labeled_lang",
+            "predicted_lang",
+            "n",
+            (F.col("labeled_lang") == F.col("predicted_lang")).alias(
+                "is_correct"
+            ),
+            (F.col("n").cast("double") / F.col("n_docs").cast("double"))
+            .alias("share"),
+        )
+    )
+
+
+# `text_readability` — Flesch reading-ease per source from three
+# integer counts (alpha-word runs, vowel-group syllable approximation,
+# sentence-ender runs): 206.835 − 1.015·(W/S) − 84.6·(Y/W) — every
+# term rational from corpus-level integer sums, no transcendentals.
+# The quality gate crawl pipelines put next to Gopher filters.
+
+# readability counts: alpha-word runs, vowel-group syllable
+# approximation (the classic [aeiouy]+ heuristic), sentence-ender runs
+# clamped to ≥1 — all regexp-run COUNTS, deterministic in both engines
+_WORD_RE = "[a-z]+"
+_SYL_RE = "[aeiouy]+"
+_SENT_RE = "[.!?]+"
+
+
+@query(
+    "text_readability",
+    oracle=f"""
+    WITH per_doc AS (
+      SELECT source,
+             CAST(len(regexp_extract_all(lower(text), '{_WORD_RE}'))
+                  AS BIGINT) AS w,
+             CAST(len(regexp_extract_all(lower(text), '{_SYL_RE}'))
+                  AS BIGINT) AS y,
+             CAST(GREATEST(len(regexp_extract_all(text, '{_SENT_RE}')), 1)
+                  AS BIGINT) AS s
+      FROM documents
+    ),
+    per_source AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(w) AS BIGINT) AS words,
+             CAST(SUM(y) AS BIGINT) AS syllables,
+             CAST(SUM(s) AS BIGINT) AS sentences
+      FROM per_doc GROUP BY source
+    )
+    SELECT source, n_docs, words, syllables, sentences,
+           206.835 - 1.015 * (CAST(words AS DOUBLE)
+                              / CAST(sentences AS DOUBLE))
+                   - 84.6 * (CAST(syllables AS DOUBLE)
+                             / CAST(words AS DOUBLE)) AS flesch,
+           CASE
+             WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE)
+                                     / CAST(sentences AS DOUBLE))
+                          - 84.6 * (CAST(syllables AS DOUBLE)
+                                    / CAST(words AS DOUBLE)) >= 70 THEN 'easy'
+             WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE)
+                                     / CAST(sentences AS DOUBLE))
+                          - 84.6 * (CAST(syllables AS DOUBLE)
+                                    / CAST(words AS DOUBLE)) >= 50
+               THEN 'standard'
+             WHEN 206.835 - 1.015 * (CAST(words AS DOUBLE)
+                                     / CAST(sentences AS DOUBLE))
+                          - 84.6 * (CAST(syllables AS DOUBLE)
+                                    / CAST(words AS DOUBLE)) >= 30
+               THEN 'difficult'
+             ELSE 'very_difficult'
+           END AS band
+    FROM per_source
+    WHERE words > 0
+    """,
+)
+def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Flesch reading ease — see the notes above.  One
+    documents scan to per-doc integer counts (map-side), one
+    source-keyed aggregate; the flesch double is the identical
+    expression in both engines over the same integer sums, and the
+    band CASE compares that double to integer literals (deterministic
+    because the double itself is bit-equal)."""
+    docs = load_table(spark, sf_dir, "documents")
+    per_doc = docs.select(
+        "source",
+        F.size(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)"))
+        .cast("bigint")
+        .alias("w"),
+        F.size(F.expr(f"regexp_extract_all(lower(text), '{_SYL_RE}', 0)"))
+        .cast("bigint")
+        .alias("y"),
+        F.greatest(
+            F.size(F.expr(f"regexp_extract_all(text, '{_SENT_RE}', 0)")),
+            F.lit(1),
+        )
+        .cast("bigint")
+        .alias("s"),
+    )
+    per_source = per_doc.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("w").cast("bigint").alias("words"),
+        F.sum("y").cast("bigint").alias("syllables"),
+        F.sum("s").cast("bigint").alias("sentences"),
+    )
+    flesch = (
+        F.lit(206.835)
+        - F.lit(1.015)
+        * (F.col("words").cast("double") / F.col("sentences").cast("double"))
+        - F.lit(84.6)
+        * (F.col("syllables").cast("double") / F.col("words").cast("double"))
+    )
+    band = (
+        F.when(flesch >= 70, "easy")
+        .when(flesch >= 50, "standard")
+        .when(flesch >= 30, "difficult")
+        .otherwise("very_difficult")
+    )
+    return per_source.where(F.col("words") > 0).select(
+        "source", "n_docs", "words", "syllables", "sentences",
+        flesch.alias("flesch"), band.alias("band"),
+    )
+
+
+# `text_vocab_overlap` — pairwise vocabulary Jaccard between sources
+# (the lexical-diversity complement of `events_audience_overlap`:
+# which crawl sources speak the same words — near-1 overlap between
+# two sources flags a mirror, near-0 flags a domain outlier):
+# word-TYPE-keyed self-join (corpus text tokenized ONCE, pairs
+# generated per word type with ≤C(|sources|,2) fan-out), exact
+# |A∩B|/|A∪B| fractions.
+
+@query(
+    "text_vocab_overlap",
+    oracle=f"""
+    WITH sw AS (
+      SELECT DISTINCT source, tok
+      FROM (SELECT source, unnest({_DUCK_TOKS}) AS tok FROM documents)
+    ), ns AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS vocab
+      FROM sw GROUP BY source
+    ), common AS (
+      SELECT a.source AS source_a, b.source AS source_b,
+             CAST(COUNT(*) AS BIGINT) AS common_words
+      FROM sw a JOIN sw b
+        ON a.tok = b.tok AND a.source < b.source
+      GROUP BY 1, 2
+    )
+    SELECT c.source_a, c.source_b, na.vocab AS vocab_a,
+           nb.vocab AS vocab_b, c.common_words,
+           c.common_words AS jac_num,
+           na.vocab + nb.vocab - c.common_words AS jac_den,
+           CAST(c.common_words AS DOUBLE)
+             / CAST(na.vocab + nb.vocab - c.common_words AS DOUBLE)
+             AS jaccard
+    FROM common c
+    JOIN ns na ON na.source = c.source_a
+    JOIN ns nb ON nb.source = c.source_b
+    """,
+)
+def text_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise source-vocabulary Jaccard — see the notes above.  One
+    tokenize → DISTINCT (source, word) collapse is the only corpus
+    pass; the self-join is word-TYPE-keyed with a source inequality
+    post-filter (fan-out ≤ C(|sources|, 2) per word type) and totals
+    broadcast onto the ≤|sources|² matrix."""
+    docs = load_table(spark, sf_dir, "documents")
+    sw = docs.select(
+        "source", F.explode(F.expr(_SPARK_TOKS)).alias("tok")
+    ).distinct()
+    ns = sw.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("vocab")
+    )
+    a = sw.alias("a")
+    b = sw.alias("b")
+    common = (
+        a.join(b, "tok")
+        .where(F.col("a.source") < F.col("b.source"))
+        .groupBy(
+            F.col("a.source").alias("source_a"),
+            F.col("b.source").alias("source_b"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("common_words"))
+    )
+    na = ns.select(
+        F.col("source").alias("source_a"), F.col("vocab").alias("vocab_a")
+    )
+    nb = ns.select(
+        F.col("source").alias("source_b"), F.col("vocab").alias("vocab_b")
+    )
+    den = F.col("vocab_a") + F.col("vocab_b") - F.col("common_words")
+    return (
+        common.join(F.broadcast(na), "source_a")
+        .join(F.broadcast(nb), "source_b")
+        .select(
+            "source_a", "source_b", "vocab_a", "vocab_b", "common_words",
+            F.col("common_words").alias("jac_num"),
+            den.alias("jac_den"),
+            (
+                F.col("common_words").cast("double") / den.cast("double")
+            ).alias("jaccard"),
+        )
+    )
+
+
+# `text_zipf_ratio` — the rank-frequency profile: frequency at ranks
+# 1, 2, 4, …, 512 (deterministic freq-desc/term-asc ranking) and the
+# exact f₁/f_k ratio.  Zipf's law predicts ratio ≈ k; the readout is
+# the standard corpus-health check (a crawl whose curve flattens is
+# template-heavy).  Rank window runs on the type-level term frame
+# (vocabulary-bounded), never on token rows.
+
+# --------------------------------------------------------------------------
+# text_zipf_ratio
+# --------------------------------------------------------------------------
+
+_ZIPF_RANKS = (1, 2, 4, 8, 16, 32, 64, 128, 256, 512)
+
+
+@query(
+    "text_zipf_ratio",
+    oracle=f"""
+    WITH t AS (
+      SELECT unnest({_DUCK_TOKS}) AS tok FROM documents
+    ), freqs AS (
+      SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq
+      FROM t GROUP BY tok
+    ), ranked AS (
+      SELECT tok, freq,
+             ROW_NUMBER() OVER (ORDER BY freq DESC, tok) AS rk
+      FROM freqs
+    ), top AS (
+      SELECT freq AS f1 FROM ranked WHERE rk = 1
+    )
+    SELECT CAST(r.rk AS BIGINT) AS rank_k, r.tok AS term, r.freq,
+           CAST(t.f1 AS DOUBLE) / CAST(r.freq AS DOUBLE) AS ratio_to_top
+    FROM ranked r, top t
+    WHERE r.rk IN {_ZIPF_RANKS}
+    """,
+)
+def text_zipf_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-frequency (Zipf) profile — see the notes above.  Token
+    rows reduce to the vocabulary frame in the first aggregate; the
+    rank window is vocabulary-bounded.  At 100 TB the window would be
+    replaced by the two-level-prefix rank (functions.prefix) — here
+    the vocabulary is small enough that the single window is the
+    honest plan."""
+    docs = load_table(spark, sf_dir, "documents")
+    freqs = (
+        docs.select(F.explode(F.expr(_SPARK_TOKS)).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
+    )
+    ranked = freqs.select(
+        "tok", "freq",
+        F.row_number()
+        .over(Window.orderBy(F.col("freq").desc(), F.col("tok")))
+        .alias("rk"),
+    )
+    # f1 via a window over the ALREADY-FILTERED ≤10-row frame (rank 1
+    # is in the rank set) — a separate rank=1 subquery would re-derive
+    # the whole tokenize pipeline and scan the corpus twice (the plan
+    # gate pins exactly one Generate)
+    picked = ranked.where(F.col("rk").isin(*_ZIPF_RANKS))
+    w_all = Window.partitionBy()
+    return picked.select(
+        F.col("rk").cast("bigint").alias("rank_k"),
+        F.col("tok").alias("term"),
+        "freq",
+        (
+            F.max(F.when(F.col("rk") == 1, F.col("freq")))
+            .over(w_all)
+            .cast("double")
+            / F.col("freq").cast("double")
+        ).alias("ratio_to_top"),
     )
