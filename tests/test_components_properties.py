@@ -78,3 +78,16 @@ def test_long_chain_converges_in_log_rounds(spark):
         for r in connected_components(pairs, max_iter=12).collect()
     }
     assert got == {v: 0 for v in range(n + 1)}
+
+
+def test_round_cap_raises_instead_of_returning_unconverged_labels(spark):
+    """Three rounds cannot close a 128-link chain: the loop must raise,
+    not hand back labels that are still propagating."""
+    from vector_ai_npm_spark.dedup.components import connected_components
+
+    n = 128
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], ["doc_id_a", "doc_id_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components(pairs, max_iter=3).collect()

@@ -205,34 +205,90 @@ def test_edge_build_equals_naive_self_join(spark, sf_smoke):
 
 
 def test_edge_cache_evicts_prior_application(spark, sf_smoke):
-    """The derived-frame caches are keyed by applicationId: an entry
-    left behind by a PRIOR application must be evicted (unpersist
-    attempted, key dropped) the next time a live session asks — the
-    staleness contract documented on graph_ops._cache_key (r13 verdict
-    item 8)."""
+    """The derived-frame caches (graph edges, symmetric edges, the kNN
+    graph) are keyed by applicationId: an entry left behind by a PRIOR
+    application must be evicted (unpersist attempted, key dropped) the
+    next time a live session asks — the staleness contract documented on
+    session.FrameCache (r13 verdict item 8)."""
     import os
 
     from vector_ai_npm_spark.operators import graph_ops
+    from vector_ai_npm_spark.retrieval import knn_graph
 
-    class _DeadFrame:
-        unpersisted = False
-
-        def unpersist(self, blocking=False):
-            _DeadFrame.unpersisted = True
-
+    caches = {
+        "edge": graph_ops._EDGE_CACHE,
+        "sym": graph_ops._SYM_CACHE,
+        "knn": knn_graph._GRAPH_CACHE,
+    }
+    dead = {}
     stale_key = ("application_from_a_previous_life", "/nowhere/sfX")
-    with graph_ops._GRAPH_CACHE_LOCK:
-        graph_ops._EDGE_CACHE[stale_key] = _DeadFrame()
-        graph_ops._SYM_CACHE[stale_key] = _DeadFrame()
+    for name, cache in caches.items():
+        class _DeadFrame:
+            unpersisted = False
+
+            def unpersist(self, blocking=False):
+                type(self).unpersisted = True
+
+        dead[name] = _DeadFrame
+        with cache.lock:
+            cache.frames[stale_key] = _DeadFrame()
 
     live = graph_ops.copurchase_edges(spark, sf_smoke)
-    assert stale_key not in graph_ops._EDGE_CACHE
-    assert _DeadFrame.unpersisted
     graph_ops._pagerank_sym_cached(spark, sf_smoke)
-    assert stale_key not in graph_ops._SYM_CACHE
+    _, graph, _ = knn_graph._fixture_graph_and_queries(spark, sf_smoke)
+    for name, cache in caches.items():
+        assert stale_key not in cache.frames, name
+        assert dead[name].unpersisted, name
 
     # key normalization: a trailing slash / relative respelling of the
     # same fixture dir must hit the SAME persisted frame, not a new one
     assert graph_ops.copurchase_edges(spark, sf_smoke + "/") is live
     rel = os.path.relpath(sf_smoke)
     assert graph_ops.copurchase_edges(spark, rel) is live
+    _, again, _ = knn_graph._fixture_graph_and_queries(spark, sf_smoke + "/")
+    assert again is graph
+
+
+def test_frame_cache_builds_once_under_concurrent_first_calls():
+    """Racing first calls for one key (through different spellings of
+    the same dir) build once and all get the same frame."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from vector_ai_npm_spark.session import FrameCache
+
+    cache = FrameCache()
+    fake_spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-stress")
+    )
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.01)  # widen the check-then-build window
+        return object()
+
+    got = []
+    spellings = ["/tmp/sfX", "/tmp/sfX/", "/tmp/./sfX"]
+    threads = [
+        threading.Thread(
+            target=lambda i=i: got.append(
+                cache.get(fake_spark, spellings[i % 3], build)
+            )
+        )
+        for i in range(16)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 16 and len({id(f) for f in got}) == 1
+    assert len(builds) == 1

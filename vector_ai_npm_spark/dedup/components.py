@@ -25,8 +25,9 @@ union-find reference (tests/test_components_properties.py).
 Scale notes: each round is two key-joins + one aggregate (all shuffles
 on vertex/label ids — never a cartesian). For near-dup clusters
 (near-cliques, diameter ≲ 3) it converges in 2-3 rounds either way.
-Lineage is cut every round with localCheckpoint — without it the plan
-doubles per iteration and planning time explodes by round ~8.
+The loop is ``operators.fixpoint.min_labels`` (shared with the SCC
+forward colouring), which checkpoints each round, stops at the fixpoint
+and raises if the round cap is reached first.
 
 Also here: `er_cluster_mentions`, with its notes in a comment above it.
 """
@@ -36,9 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from vector_ai_npm_spark.io.sources import load_table
+from vector_ai_npm_spark.operators.fixpoint import min_labels, require_integral
 from vector_ai_npm_spark.registry import query
-
-_SUM_UNSET = object()  # convergence-sum sentinel (see the round loop)
 
 
 def connected_components(
@@ -48,64 +48,24 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(src, dst) pairs → (doc_id, component_id) for every vertex that
-    appears in any pair; component_id = min doc_id of the component."""
+    appears in any pair; component_id = min doc_id of the component.
+
+    Raises TypeError (before any job) unless the id columns are
+    integral, and RuntimeError if ``max_iter`` rounds do not converge."""
+    # min_labels checks too, but the edge checkpoint below is already a job
+    require_integral(pairs, src, dst)
     edges = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .union(pairs.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
         .distinct()
         .localCheckpoint()
     )
-    labels = edges.select(F.col("s").alias("v")).distinct().select(
-        "v", F.col("v").alias("label")
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
     )
-    prev_sum: object = _SUM_UNSET
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.d == labels.v)
-            .groupBy("s")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(nbr_min, labels.v == nbr_min.s, "left").select(
-            "v",
-            F.least(
-                F.col("label"), F.coalesce("nbr_label", F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jump: label[v] := label[label[v]] — labels are vertex
-        # ids, so self-joining the label relation doubles propagation
-        # distance per round (O(log n) rounds on chains vs O(n) without)
-        lv = stepped.select(
-            F.col("v").alias("jv"), F.col("label").alias("jlabel")
-        )
-        new_labels = (
-            stepped.join(lv, stepped.label == lv.jv, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce("jlabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)  # lazy: the convergence
-            # aggregate below is the materializing action, so lineage
-            # is cut at ONE job per round instead of checkpoint + check
-        )
-        # Convergence witness (r14): labels only ever DECREASE (every
-        # update is a least() against the previous value over a fixed
-        # vertex set), so an unchanged exact label SUM proves no vertex
-        # changed — replacing the old per-round new⋈old join+count with
-        # one aggregate that doubles as the checkpoint materializer.
-        # decimal(38,0) keeps the sum exact at any vertex-id magnitude.
-        lsum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        labels = new_labels
-        # sentinel start: the first round can never false-break, and an
-        # EMPTY vertex set (sum NULL every round) still terminates on
-        # the second round's NULL == NULL
-        if lsum == prev_sum:
-            break
-        prev_sum = lsum
-    return labels.select(F.col("v").alias("doc_id"), F.col("label").alias("component_id"))
+    return min_labels(edges, labels, max_iter).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("component_id")
+    )
 
 
 def assign_components(

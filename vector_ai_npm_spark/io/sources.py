@@ -67,20 +67,6 @@ def scale_partitions(df: DataFrame, spark: SparkSession,
     return df.repartition(n)
 
 
-def materialize_count(df: DataFrame) -> int:
-    """Materialize a lazily localCheckpoint-ed frame and return its row
-    count in ONE job with no fresh Catalyst pass: count the INTERNAL
-    row RDD directly — exactly what an eager localCheckpoint does under
-    the hood — instead of planning a new count() aggregate per call
-    (measured ~50 ms of driver planning per round on the unrolled
-    iterative faces, r14).  Falls back to DataFrame.count() if the
-    internal handle is unavailable."""
-    try:
-        return int(df._jdf.queryExecution().toRdd().count())
-    except Exception:
-        return int(df.count())
-
-
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}

@@ -16,25 +16,14 @@ chain, 5 at the largest fixture; real graphs converge in tens of rounds
 peeling would be).
 
 Fixed-unroll discipline (the graph_pagerank / recursive-CTE decision):
-the registry face unrolls ``_ROUNDS = 6`` peel rounds — strictly more
-than any fixture needs (measured fixpoint depth: 0 / 3 / 5 rounds at
-sf0.001 / 0.01 / 0.1) — and tests/test_wave7.py (test_kcore_fixpoint_reached) proves round
-R−1 ≡ round R on real fixtures, so the unrolled answer IS the exact
-k-core, not an approximation.  The production loop iterates until a
-per-round ``dropped == 0`` 1-row aggregate instead (same plan per
-round, data-dependent round count).
-
-Lineage discipline: each round's surviving edge list is
-``localCheckpoint(eager=True)``-ed.  ``persist()`` is NOT enough here —
-e{r+1}'s logical plan references e{r} three times (directly + twice via
-the alive frontier), so even with every intermediate cached the PLAN
-TREE grows 3^R nodes and the driver OOMs during analysis at R=6
-(measured: java heap exhaustion at sf0.01).  Checkpointing truncates
-the lineage to a leaf scan per round, keeping plans O(1) per round and
-total work O(R) passes — the standard iterative-algorithm recipe
-(GraphX/Pregel does exactly this internally).  In production the
-checkpoint goes to reliable storage (``sparkContext.setCheckpointDir``
-+ ``checkpoint()``); local executor storage is the single-node face.
+the registry face declares ``_ROUNDS = 6`` peel rounds — the count the
+DuckDB oracle unrolls, strictly more than any fixture needs (measured
+fixpoint depth: 0 / 3 / 5 rounds at sf0.001 / 0.01 / 0.1) — and
+tests/test_wave7.py (test_kcore_fixpoint_reached) proves round R−1 ≡
+round R on real fixtures, so the unrolled answer IS the exact k-core.
+The loop is ``operators.fixpoint.peel``: rounds are checkpointed and
+stop at the fixpoint, with the witness and the proof that the early
+stop is bit-identical kept there.
 """
 
 from __future__ import annotations
@@ -42,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_ai_npm_spark.io.sources import materialize_count
+from vector_ai_npm_spark.operators.fixpoint import peel
 from vector_ai_npm_spark.operators.graph_ops import (
     _O_EDGES,
     _pagerank_sym_cached,
@@ -89,32 +78,19 @@ def kcore(spark: SparkSession, sf_dir: str, k: int = _K,
     """(node, core_deg) for every node of the k-core after ``rounds``
     synchronous peel rounds (exact k-core once fixpoint is reached —
     pinned on fixtures by tests/test_wave7.py)."""
-    edges = _pagerank_sym_cached(spark, sf_dir)
-    # r14: rounds past the fixpoint are skipped — the peel only REMOVES
-    # edges, so an unchanged edge count proves the surviving edge set is
-    # identical and every remaining unrolled round is the identity (the
-    # answer is bit-identical to the full unroll).  At sf0.001 the peel
-    # converges immediately (4 of 6 rounds skipped); at sf0.1 depth 5
-    # means no round is skipped — which is why the count must be FREE:
-    # the per-round checkpoint is lazy (eager=False) and count() is the
-    # action that materializes it, so each round still runs exactly two
-    # jobs (alive, edges) and the fixpoint witness costs no extra job.
-    n_prev = None
-    for _ in range(rounds):
+
+    def drop_light(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("node").agg(F.count(F.lit(1)).alias("c"))
         alive = deg.where(F.col("c") >= k).select("node").localCheckpoint()
-        edges = (
+        return (
             edges.join(alive, "node", "left_semi")
             .join(
                 alive.withColumnRenamed("node", "nbr"), "nbr", "left_semi"
             )
             .select("node", "nbr")
-            .localCheckpoint(eager=False)
         )
-        n = materialize_count(edges)  # one job: checkpoint + witness
-        if n == n_prev:
-            break  # fixpoint reached: later rounds drop nothing
-        n_prev = n
+
+    edges = peel(_pagerank_sym_cached(spark, sf_dir), drop_light, rounds)
     return (
         edges.groupBy("node")
         .agg(F.count(F.lit(1)).alias("core_deg"))

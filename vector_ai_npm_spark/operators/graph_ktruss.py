@@ -10,11 +10,11 @@ support with a support filter to fixpoint.
 Scale shape: each truss round is ONE degree-oriented triangle pass
 (compact-forward wedges, fan-out O(√m) per node — the
 graph_triangles machinery reused on the shrinking edge set) + one
-edge-keyed aggregate; rounds localCheckpoint (the k-core lineage
-discipline — the plan references each round's edges three ways).
-Fixed-unroll discipline (graph_kcore's): _ROUNDS=3 > the measured
-fixpoint depth 2 at every fixture sf, and the final support pass is
-emitted so the answer carries per-edge embeddedness, not just
+edge-keyed aggregate.  The loop is ``operators.fixpoint.peel`` (support
+filtering only removes edges), which checkpoints each round and stops at
+the fixpoint.  Fixed-unroll discipline (graph_kcore's): _ROUNDS=3 > the
+measured fixpoint depth 2 at every fixture sf, and the final support
+pass is emitted so the answer carries per-edge embeddedness, not just
 membership.
 """
 
@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_ai_npm_spark.operators.fixpoint import peel
 from vector_ai_npm_spark.operators.graph_ops import (
     _O_EDGES,
     _degree_oriented_wedges,
@@ -66,37 +67,18 @@ def edge_support(edges: DataFrame) -> DataFrame:
 
 def ktruss_edges(edges: DataFrame, k: int = _K,
                  rounds: int = _ROUNDS) -> DataFrame:
-    """(src, dst, support) of the k-truss fixpoint, support computed in
-    the FINAL subgraph.  Production form loops on a per-round
-    `dropped == 0` scalar; the registry face unrolls a proven-
-    sufficient round count (the graph_kcore decision).
+    """(src, dst, support) of the k-truss after up to ``rounds`` peel
+    rounds (stopping early at the fixpoint), support computed in the
+    FINAL subgraph."""
 
-    r14: rounds past the fixpoint are skipped.  The support filter only
-    ever REMOVES edges (each surviving (lo, hi) is a canonical edge of
-    the round's input), so an unchanged edge COUNT after a round proves
-    the edge set is identical — every remaining unrolled round would
-    recompute the same set, and the final support pass sees the same
-    subgraph either way.  The witness is free: the per-round checkpoint
-    is lazy (eager=False) and count() is the action that materializes
-    it — one job per round exactly as before, while each skipped round
-    saves a full wedge-join pass (~0.5 s at sf0.1, fixpoint depth 2 of
-    3 unrolled rounds).  Results are provably bit-identical to the full
-    unroll."""
-    from vector_ai_npm_spark.io.sources import materialize_count
-
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    n_prev = materialize_count(e)  # one job: checkpoint + witness
-    for _ in range(rounds):
-        sup = edge_support(e)
-        e = (
-            sup.where(F.col("support") >= k - 2)
-            .select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-            .localCheckpoint(eager=False)
+    def drop_weak(e: DataFrame) -> DataFrame:
+        return edge_support(e).where(F.col("support") >= k - 2).select(
+            F.col("lo").alias("src"), F.col("hi").alias("dst")
         )
-        n = materialize_count(e)
-        if n == n_prev:
-            break  # fixpoint: nothing dropped, later rounds are identity
-        n_prev = n
+
+    # checkpointed input: the wedge joins pick broadcasts from size
+    # stats, which a persisted (in-memory) input frame does not expose
+    e = peel(edges.select("src", "dst").localCheckpoint(), drop_weak, rounds)
     return (
         edge_support(e)
         .where(F.col("support") >= k - 2)

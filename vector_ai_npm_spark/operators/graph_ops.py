@@ -31,10 +31,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from vector_ai_npm_spark.functions.numeric import dsum, o_dsum
 from vector_ai_npm_spark.io.sources import load_table
 from vector_ai_npm_spark.registry import query
+from vector_ai_npm_spark.session import FrameCache
 
 _MIN_W = 2          # repeat co-purchases only: keeps the graph sparse
 _DAMPING = 0.85
@@ -59,30 +61,7 @@ _O_EDGES = f"""
 """
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-# One lock guards BOTH derived-frame caches (_EDGE_CACHE and _SYM_CACHE,
-# r13 advice): without it two threads racing the first call for a key
-# each persist a frame and one leaks in executor storage untracked.
-_GRAPH_CACHE_LOCK = __import__("threading").Lock()
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(applicationId, realpath(sf_dir)): the realpath normalization
-    keeps equivalent spellings ('/x/sf0.1' vs '/x/sf0.1/', relative
-    paths, symlinks) from creating duplicate persisted frames in one
-    application (r13 advice).
-
-    Staleness contract (r13 verdict item 4): entries are keyed by
-    applicationId and evicted when a NEW application shows up — there is
-    deliberately NO invalidation if the fixture files change under a
-    live session.  The driver contract runs a fresh session per round,
-    and a production driver owns its input immutability the same way
-    (the fixture dirs are write-once); re-deriving per call to defend
-    against in-place mutation would forfeit the measured 1.29 s/call
-    saving for a failure mode the layout already rules out."""
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
+_EDGE_CACHE = FrameCache()
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,30 +71,16 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every graph face starts from this frame, and the build (the
     corpus-scale basket aggregate below) measured 1.29 s at sf0.1 for a
     3,573-row result — while ten registry faces each re-derived it per
-    invocation (r13 optimization round).  The cache is the
-    `_pagerank_sym_cached` discipline applied one level down: keyed by
-    applicationId (not id(spark)); prior-application entries evicted
-    best-effort.  The cached frame is graph-sized (≤ distinct-part
-    pairs with support ≥ _MIN_W), never corpus-sized, so the persist
-    is bounded at any scale.  Staleness/eviction contract: see
-    :func:`_cache_key`."""
-    from pyspark.storagelevel import StorageLevel
-
-    key = _cache_key(spark, sf_dir)
-    with _GRAPH_CACHE_LOCK:
-        for stale in [k for k in _EDGE_CACHE if k[0] != key[0]]:
-            df = _EDGE_CACHE.pop(stale)
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass  # dead JVM — the storage died with it
-        cached = _EDGE_CACHE.get(key)
-        if cached is None:
-            cached = _copurchase_edges_uncached(spark, sf_dir).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            _EDGE_CACHE[key] = cached
-    return cached
+    invocation (r13 optimization round).  The cached frame is
+    graph-sized (≤ distinct-part pairs with support ≥ _MIN_W), never
+    corpus-sized, so the persist is bounded at any scale.  Key,
+    eviction and staleness contract: see :class:`session.FrameCache`."""
+    return _EDGE_CACHE.get(
+        spark, sf_dir,
+        lambda: _copurchase_edges_uncached(spark, sf_dir).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+    )
 
 
 def _copurchase_edges_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,42 +368,18 @@ def basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SYM_CACHE: dict[tuple[str, str], DataFrame] = {}
+_SYM_CACHE = FrameCache()
 
 
 def _pagerank_sym_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric edge list, persisted once per (application, fixture
-    dir). Keyed by applicationId, NOT id(spark): a Python id can be
-    reused after the old session is garbage-collected, which would hand
-    back a cached DataFrame bound to a dead JVM.  Entries from a PRIOR
-    application are evicted (best-effort unpersist) so long-lived
-    processes that cycle sessions don't accumulate dead references or
-    leak executor storage in the live one.  Key normalization and the
-    staleness contract: see :func:`_cache_key`."""
-    from pyspark.storagelevel import StorageLevel
-
-    key = _cache_key(spark, sf_dir)
-    # build the edge frame OUTSIDE the lock (copurchase_edges takes the
-    # same lock); the double-checked get keeps the race benign
-    with _GRAPH_CACHE_LOCK:
-        for stale in [k for k in _SYM_CACHE if k[0] != key[0]]:
-            df = _SYM_CACHE.pop(stale)
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass  # dead JVM — the storage died with it
-        cached = _SYM_CACHE.get(key)
-    if cached is None:
-        built = (
-            _symmetrized(copurchase_edges(spark, sf_dir))
-            .select("node", "nbr")
-        )
-        with _GRAPH_CACHE_LOCK:
-            cached = _SYM_CACHE.get(key)
-            if cached is None:
-                cached = built.persist(StorageLevel.MEMORY_AND_DISK)
-                _SYM_CACHE[key] = cached
-    return cached
+    """Symmetric (node, nbr) edge list, persisted once per (application,
+    fixture dir); see :class:`session.FrameCache`."""
+    return _SYM_CACHE.get(
+        spark, sf_dir,
+        lambda: _symmetrized(copurchase_edges(spark, sf_dir))
+        .select("node", "nbr")
+        .persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def _o_pr_iter(prev: str, out: str) -> str:

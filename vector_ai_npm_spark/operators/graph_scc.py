@@ -6,9 +6,9 @@ Algorithm (the color-SCC scheme used by distributed SCC systems,
 specialized to min-labels):
 
   1. COLOR: propagate color(v) = min id reachable FROM v along forward
-     edges to fixpoint (≤ graph diameter equi-join rounds — the
-     connected_components loop shape, dedup/components.py:38, applied
-     to a directed relation).
+     edges to fixpoint — ``operators.fixpoint.min_labels``, the
+     connected_components loop applied to a directed relation (pointer
+     jumping makes it ~log(diameter) rounds; the cap raises).
   2. HEADS: h is a head iff color(h) = h.  For any v with color(v)=h,
      v →* h by construction.
   3. CONFIRM: mark nodes reachable FROM their own head through
@@ -35,8 +35,8 @@ the hash face pins the distributed implementation, Tarjan pins the
 algorithm.
 
 Scale shape: every round is an equi-join + groupBy-min on the edge
-relation (localCheckpoint per round caps lineage); rounds = diameter,
-phases = peeling depth.  No cartesian anywhere; the edge relation is
+relation (checkpointed per round); rounds ≈ log(diameter), phases =
+peeling depth.  No cartesian anywhere; the edge relation is
 the only corpus-sized frame.
 
 `graph_condensation` — the product SCC decomposition exists for:
@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.io.sources import load_table
+from vector_ai_npm_spark.operators.fixpoint import min_labels
 from vector_ai_npm_spark.registry import query
 
 
@@ -70,7 +71,7 @@ def scc_colored(
     """(node_id) + (src, dst) → (node_id, scc_id); scc_id = min member.
 
     Raises RuntimeError if the graph needs more than ``max_rounds``
-    propagation rounds (diameter) or ``max_phases`` peel phases."""
+    propagation rounds or ``max_phases`` peel phases."""
     remaining = nodes.select("node_id").distinct().localCheckpoint()
     all_edges = edges.select("src", "dst").distinct().localCheckpoint()
     found_frames: list[DataFrame] = []
@@ -84,64 +85,17 @@ def scc_colored(
         ).join(remaining.select(F.col("node_id").alias("dst")), "dst")
         live = live.localCheckpoint()
 
-        # 1. forward-min coloring to fixpoint
-        color = remaining.select(
-            "node_id", F.col("node_id").alias("color")
-        ).localCheckpoint()
-        for _round in range(max_rounds):
-            nbr = (
-                live.join(
-                    color.select(
-                        F.col("node_id").alias("dst"),
-                        F.col("color").alias("dst_color"),
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("dst_color").alias("nbr_min"))
-            )
-            stepped = color.join(
-                nbr, color.node_id == nbr.src, "left"
-            ).select(
-                "node_id",
-                F.least(
-                    F.col("color"),
-                    F.coalesce("nbr_min", F.col("color")),
-                ).alias("color"),
-            )
-            # pointer jump: colors are node ids, and min-fwd-reachable
-            # is transitive (color(color(v)) is fwd-reachable from v),
-            # so color[v] := min(color[v], color[color[v]]) doubles the
-            # propagation horizon — rounds drop from diameter to
-            # ~log(diameter) (the connected_components idiom, applied
-            # to the directed fold)
-            hop = stepped.select(
-                F.col("node_id").alias("_c"), F.col("color").alias("_cc")
-            )
-            stepped = (
-                stepped.join(hop, stepped.color == hop._c, "left")
-                .select(
-                    "node_id",
-                    F.least(
-                        F.col("color"), F.coalesce("_cc", F.col("color"))
-                    ).alias("color"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                stepped.alias("n")
-                .join(color.alias("o"), "node_id")
-                .where(F.col("n.color") != F.col("o.color"))
-                .count()
-            )
-            color = stepped
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"SCC coloring did not converge in {max_rounds} rounds "
-                "(graph diameter exceeds the bound) — raise max_rounds"
-            )
+        # 1. forward-min coloring to fixpoint: color(src) pulls the
+        # min color of its dsts, so it ends as the min id reachable
+        # forward; the pointer jump is sound because color(color(v)) is
+        # forward-reachable from v
+        color = min_labels(
+            live,
+            remaining.select(
+                F.col("node_id").alias("node"), F.col("node_id").alias("label")
+            ),
+            max_rounds,
+        ).select(F.col("node").alias("node_id"), F.col("label").alias("color"))
 
         # 2+3. heads, then same-color forward reachability from heads
         marked = color.where(F.col("node_id") == F.col("color")).select(

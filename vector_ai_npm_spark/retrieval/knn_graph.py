@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.functions.vectors import cosine_similarity
+from vector_ai_npm_spark.session import FrameCache
 
 
 def _topk_per_key(df: DataFrame, key: str, k: int) -> DataFrame:
@@ -592,7 +593,7 @@ def scaled_search_params(n: int) -> tuple[int, int, int]:
     return beam, entries, budget
 
 
-_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = {}
+_GRAPH_CACHE = FrameCache()
 
 
 def _fixture_graph_and_queries(spark, sf_dir):
@@ -604,23 +605,13 @@ def _fixture_graph_and_queries(spark, sf_dir):
     # Cache the built graph per (application, fixture): the search face
     # and the recall contract consume the SAME build, and the build is
     # the dominant cost (66 min at 200k vectors, TUNING.md r12 #7 — a
-    # sweep that rebuilds it per face times out forever).  App-id
-    # keyed with prior-app eviction, the _pagerank_sym_cached
-    # discipline (graph_ops.py).
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _GRAPH_CACHE if k[0] != app_id]:
-        df = _GRAPH_CACHE.pop(stale)
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass  # dead JVM
-    key = (app_id, sf_dir)
-    graph = _GRAPH_CACHE.get(key)
-    if graph is None:
-        graph = build_knn_graph(
+    # sweep that rebuilds it per face times out forever).
+    graph = _GRAPH_CACHE.get(
+        spark, sf_dir,
+        lambda: build_knn_graph(
             emb, k=_KG, **scaled_build_params(emb.count())
-        ).localCheckpoint(eager=True)
-        _GRAPH_CACHE[key] = graph
+        ).localCheckpoint(eager=True),
+    )
     queries = emb.where(F.col("vec_id").isin(0, 7, 42)).select(
         F.col("vec_id").alias("q_vec_id"),
         F.col("embedding").alias("q_embedding"),
