@@ -534,3 +534,29 @@ def test_png_16bit_and_alpha_roundtrip():
         b for i in range(0, len(msb), 4) for b in msb[i : i + 3]
     )
     assert (dw, dh, dec) == (w, h, want)
+
+
+@pytest.mark.parametrize("spread", [True, False])
+def test_per_row_passes_plain_values_and_names_columns_from_schema(
+    spark, spread
+):
+    """audits.per_row hands the row function plain Python values — not
+    numpy scalars, not bytearray — and names the output columns in
+    schema order, whatever the input column order."""
+    from vector_ai_npm_spark.multimodal.audits import per_row
+
+    src = spark.createDataFrame(
+        [(1, True, bytearray(b"ab"), "x"), (2, False, bytearray(b""), "yz")],
+        "i long, b boolean, p binary, s string",
+    )
+
+    def row(i, b, p, s):
+        types = ",".join(type(v).__name__ for v in (i, b, p, s))
+        return s, types, i * 10 + len(p)
+
+    out = per_row(src, row, "s string, types string, n long", spread=spread)
+    assert out.columns == ["s", "types", "n"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("x", "int,bool,bytes,str", 12),
+        ("yz", "int,bool,bytes,str", 20),
+    ]

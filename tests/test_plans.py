@@ -38,6 +38,24 @@ def test_container_audits_spread_matches_table(spark, sf_smoke):
     assert unspread == {"multimodal_exif_orientation", "multimodal_webp_dims"}
 
 
+def test_decode_faces_spread_except_quarantine(spark, sf_smoke):
+    """The nine codec roundtrip faces in multimodal/decodes.py spread
+    their derived source to executor parallelism (a RoundRobin
+    exchange); the quarantine face stays map-only (explain only,
+    nothing runs)."""
+    from vector_ai_npm_spark.multimodal import decodes
+
+    faces = sorted(
+        name for name, fn in registry.all_queries().items()
+        if fn.__module__ == decodes.__name__
+    )
+    assert len(faces) == 10, faces
+    for name in faces:
+        plan = _plan(spark, name, sf_smoke)
+        spread = name != "multimodal_decode_quarantine"
+        assert ("RoundRobinPartitioning" in plan) == spread, f"{name}:\n{plan}"
+
+
 def test_filter_project_pushes_predicates_and_prunes(spark, sf_smoke):
     plan = _plan(spark, "filter_project", sf_smoke)
     assert "PushedFilters: [" in plan

@@ -152,3 +152,22 @@ def test_scc_partial_tail_group_decomposes_to_singletons(spark):
         assert got[r] == grp(r)
     for r in (20, 21, 22):
         assert got[r] == r
+
+
+@pytest.mark.parametrize("max_rounds", [4, 11, 12])
+def test_scc_confirmation_round_cap(spark, max_rounds):
+    """Every node points at 0 and 0 → 1 → … → 11: one SCC whose head 0
+    reaches node 11 at hop 11, while the coloring converges in one
+    round.  A cap below 12 stops the confirmation search with the
+    frontier still live and must raise; 12 returns the one SCC."""
+    n = 12
+    edges = [(i, 0) for i in range(1, n)] + [(i, i + 1) for i in range(n - 1)]
+    if max_rounds < n:
+        with pytest.raises(
+            RuntimeError, match="SCC confirmation did not converge"
+        ):
+            _run_scc(spark, n, edges, max_rounds=max_rounds)
+    else:
+        assert _run_scc(spark, n, edges, max_rounds=max_rounds) == {
+            i: 0 for i in range(n)
+        }

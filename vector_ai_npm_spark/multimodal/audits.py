@@ -11,10 +11,12 @@ pixel, sample or page content is decoded; payloads never leave the
 executor that made them.
 
 Every audit is one row of :data:`AUDITS` — (row function, output
-schema, spread) — fed to :func:`_parse_back`, plus its own final
+schema, spread) — fed to :func:`per_row`, plus its own final
 aggregate.  ``spread`` round-robins the 8 B/row doc_id frame to executor
 parallelism first (``io.sources.scale_partitions``), so a byte-sized
 input split cannot serialize a CPU-bound synth+parse onto one core.
+:func:`per_row` is also the mapper of the pixel-decode faces
+(``decodes.py``).
 """
 
 from __future__ import annotations
@@ -204,27 +206,33 @@ AUDITS: dict[str, tuple[Callable[[int], tuple], str, bool]] = {
 }
 
 
-def _parse_back(
-    spark: SparkSession,
-    sf_dir: str,
-    row: Callable[[int], tuple],
+def per_row(
+    frame: DataFrame,
+    row: Callable[..., tuple],
     schema: str,
-    spread: bool,
+    spread: bool = True,
 ) -> DataFrame:
-    """One output row per document: ``row(doc_id)`` over Arrow batches
-    of the doc_id column, optionally spread first (module docstring)."""
+    """One output row per input row: ``row(*values)`` over Arrow batches
+    of ``frame``, the values plain Python (``int``, ``bool``, ``bytes``,
+    ``str``) in column order; the output columns are named from
+    ``schema``.  ``spread`` round-robins ``frame`` to executor
+    parallelism first (module docstring)."""
     columns = [field.split()[0] for field in schema.split(", ")]
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    def _audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame(
-                [row(int(did)) for did in pdf["doc_id"]], columns=columns
-            )
+            values = zip(*(col.tolist() for _, col in pdf.items()))
+            yield pd.DataFrame([row(*v) for v in values], columns=columns)
 
     if spread:
-        docs = scale_partitions(docs, spark)
-    return docs.mapInPandas(_audit, schema=schema)
+        frame = scale_partitions(frame, frame.sparkSession)
+    return frame.mapInPandas(_map, schema=schema)
+
+
+def _parse_back(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Audit ``name``'s :data:`AUDITS` row over every document id."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return per_row(docs, *AUDITS[name])
 
 
 @query(
@@ -243,7 +251,7 @@ def _parse_back(
 def multimodal_tiff_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIFF dims/endianness audit over real header bytes — see module
     docstring."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_tiff_dims"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_tiff_dims")
     return parsed.groupBy("endianness").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("width").cast("bigint").alias("sum_width"),
@@ -283,9 +291,7 @@ def multimodal_exif_orientation(
     back in the executors; the oracle reconstructs orientation/dims
     from the synthesis formula, so a marker-walk, IFD, endianness, or
     transpose defect flips a count or a display-dim sum → hash red."""
-    parsed = _parse_back(
-        spark, sf_dir, *AUDITS["multimodal_exif_orientation"]
-    )
+    parsed = _parse_back(spark, sf_dir, "multimodal_exif_orientation")
     return parsed.groupBy("orientation", "needs_transpose").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("display_w").cast("bigint").alias("sum_display_width"),
@@ -327,7 +333,7 @@ def multimodal_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     number ONLY by building the skeleton bytes and parsing them back
     (the encode_webp_header discipline), so a header, object-walk,
     catalog-chain, or Count defect flips a sum → hash red."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_pdf_pages"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_pdf_pages")
     return parsed.groupBy("version").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_pages").cast("bigint").alias("total_pages"),
@@ -368,7 +374,7 @@ def multimodal_apng_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     number comes from building real CRC-valid chunk bytes and parsing
     them back; decode_pixels = Σ w·h·frames is the capacity figure the
     audit exists to produce."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_apng_frames"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_apng_frames")
     return parsed.groupBy("is_animated").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("frames").cast("bigint").alias("total_frames"),
@@ -406,7 +412,7 @@ def multimodal_wav_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel-seconds at which rates).  Real RIFF bytes built and parsed
     back per doc; total_micros uses integer floor-division so both
     engines sum exact integers."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_wav_dims"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_wav_dims")
     return parsed.groupBy("channels", "sample_rate").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("frames").cast("bigint").alias("total_frames"),
@@ -442,7 +448,7 @@ def multimodal_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     ISO-BMFF box bytes — mvhd v0 (even doc_ids, 1 kHz timescale) and
     v1 (odd, 90 kHz) both exercised, durations converted with exact
     integer floor-division so both engines sum integers."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_mp4_dims"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_mp4_dims")
     return parsed.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("tracks").cast("bigint").alias("total_tracks"),
@@ -472,7 +478,7 @@ def multimodal_webp_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes and parsing them back, so a regression in either the RIFF
     chunk walk or any variant's dimension-field layout flips a sum →
     hash mismatch."""
-    parsed = _parse_back(spark, sf_dir, *AUDITS["multimodal_webp_dims"])
+    parsed = _parse_back(spark, sf_dir, "multimodal_webp_dims")
     return parsed.groupBy("variant").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assets"),
         F.sum("width").cast("bigint").alias("sum_width"),

@@ -33,7 +33,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -534,6 +534,19 @@ def decode_image(payload: bytes) -> tuple[int, int]:
     return w, h
 
 
+def hex_chain(*salts: str) -> Column:
+    """``sha2(text) || sha2(text || salts[0]) || …`` over the documents'
+    ``text``: 64 hex chars per block, the deterministic pixel/sample
+    byte source of the synth payloads and the decode faces.  The chars
+    are ASCII (one byte each) and DuckDB rebuilds the same chain with
+    ``sha256`` + ``unicode()``, which is what lets those faces carry
+    value oracles."""
+    return F.concat(
+        F.sha2(F.col("text"), 256),
+        *(F.sha2(F.concat(F.col("text"), F.lit(s)), 256) for s in salts),
+    )
+
+
 def synth_ppm_media(docs: DataFrame) -> DataFrame:
     """Fixture adapter for the REAL decode path: a genuine binary P6 PPM
     per document, built entirely JVM-side. Dims vary per doc
@@ -550,11 +563,7 @@ def synth_ppm_media(docs: DataFrame) -> DataFrame:
     onto one core (r13: measured 8.8 s -> 1.0 s on the webp face)."""
     w = (F.lit(4) + F.col("doc_id") % 5).cast("int")
     h = (F.lit(4) + F.col("doc_id") % 3).cast("int")
-    chain = F.concat(
-        F.sha2(F.col("text"), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("a")), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("b")), 256),
-    )
+    chain = hex_chain("a", "b")
     header = F.format_string("P6\n%d %d\n255\n", w, h)
     body = F.substring(chain, F.lit(1), w * h * 3)
     out = docs.select(
@@ -693,11 +702,7 @@ def synth_pcm_media(docs: DataFrame) -> DataFrame:
     the same sha2 hex chain the PPM synth uses, so ASCII (1 byte/char)
     and bit-reproducible in DuckDB (sha256 + unicode), which is what
     lets the frame-energy query carry a value oracle."""
-    chain = F.concat(
-        F.sha2(F.col("text"), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("a")), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("b")), 256),
-    )
+    chain = hex_chain("a", "b")
     out = docs.select(
         F.col("doc_id").alias("asset_id"),
         F.lit("audio").alias("modality"),
@@ -759,11 +764,7 @@ def synth_video_media(docs: DataFrame) -> DataFrame:
     "frames" per document from the sha2 hex chain (96 ASCII bytes
     total) — the N-frames-in-one-payload layout real video shards use,
     reproducible in DuckDB for value oracles."""
-    chain = F.concat(
-        F.sha2(F.col("text"), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("a")), 256),
-        F.sha2(F.concat(F.col("text"), F.lit("b")), 256),
-    )
+    chain = hex_chain("a", "b")
     out = docs.select(
         F.col("doc_id").alias("asset_id"),
         F.lit("video").alias("modality"),

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.io.sources import load_table
-from vector_ai_npm_spark.multimodal.binary import decode_pixels
+from vector_ai_npm_spark.multimodal.binary import decode_pixels, hex_chain
 from vector_ai_npm_spark.registry import query
 
 _GRID_W, _GRID_H = 9, 8          # 8 gradients/row × 8 rows = 64 bits
@@ -59,22 +59,13 @@ _DHASH_SCHEMA = "asset_id long, dhash string, hi long, lo long"
 # --------------------------------------------------------------------------
 
 
-_CHAIN_SUFFIXES = ("", "a", "b", "c", "d", "e", "f", "g")  # 8 × 64 hex
-
-
-def _chain(text_col: F.Column | str) -> F.Column:
-    """512-char sha2 hex chain — the deterministic pixel-byte source
-    (synth_ppm_media recipe, binary.py:310, extended to 8 blocks: dHash
-    needs images at least 9×8 so every grid cell samples a DISTINCT
-    source pixel; the 3-block chain's 4-8 px images upsample
-    degenerately — duplicated sample columns force gradients to zero
-    and collapse the hash to ~12 effective bits, measured as ~520
-    accidental fixture collisions)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.concat(*[
-        F.sha2(F.concat(c, F.lit(sfx)), 256) if sfx else F.sha2(c, 256)
-        for sfx in _CHAIN_SUFFIXES
-    ])
+# The pixel source is an 8-block (512-char) hex chain, not the synth
+# payloads' 3 blocks: dHash needs images at least 9×8 so every grid cell
+# samples a DISTINCT source pixel; the 3-block chain's 4-8 px images
+# upsample degenerately — duplicated sample columns force gradients to
+# zero and collapse the hash to ~12 effective bits, measured as ~520
+# accidental fixture collisions.
+_CHAIN_SALTS = ("a", "b", "c", "d", "e", "f", "g")
 
 
 def _payload(body_chain: F.Column) -> F.Column:
@@ -91,7 +82,7 @@ def media_base(docs: DataFrame) -> DataFrame:
     """Base P6 payloads (synth_ppm_media recipe at dHash-sized dims)."""
     return docs.select(
         F.col("doc_id").alias("asset_id"),
-        _payload(_chain("text")).alias("payload"),
+        _payload(hex_chain(*_CHAIN_SALTS)).alias("payload"),
     )
 
 
@@ -102,7 +93,9 @@ def media_with_plants(docs: DataFrame) -> DataFrame:
     perturbed = docs.where(F.col("doc_id") % _PLANT_EVERY == 0).select(
         (F.col("doc_id") + _PLANT_OFFSET).alias("asset_id"),
         _payload(
-            F.concat(F.lit("z"), F.substring(_chain("text"), 2, 511))
+            F.concat(
+                F.lit("z"), F.substring(hex_chain(*_CHAIN_SALTS), 2, 511)
+            )
         ).alias("payload"),
     )
     return media_base(docs).unionByName(perturbed)
@@ -223,8 +216,7 @@ def _o_bit() -> str:
 
 
 _O_CHAIN = " || ".join(
-    f"sha256(text || '{sfx}')" if sfx else "sha256(text)"
-    for sfx in _CHAIN_SUFFIXES
+    ["sha256(text)"] + [f"sha256(text || '{s}')" for s in _CHAIN_SALTS]
 )
 
 

@@ -4,7 +4,7 @@
   WHOLE image corpus: the dataset normalization constants every vision
   training pipeline computes once before training (the ImageNet
   mean/std preprocessing step).  New shape vs the per-asset decode
-  faces (multimodal/queries.py): the decode feeds a corpus-level
+  faces (multimodal/decodes.py): the decode feeds a corpus-level
   aggregate, so the Python stage emits only 3 integer-sum rows per
   asset; the synth media frame reaches it through ONE bounded
   derived-payload exchange (~100-500 B/row — the shared builders run
@@ -48,7 +48,7 @@ from vector_ai_npm_spark.operators.eval_metrics import _o_d2d
 from vector_ai_npm_spark.registry import query
 
 # hex-chain PPM pixel reconstruction shared with multimodal_decode's
-# oracle (multimodal/queries.py:68) — w*h*3 ASCII bytes per doc
+# oracle (multimodal/queries.py) — w*h*3 ASCII bytes per doc
 _DUCK_CHAIN = (
     "sha256(text) || sha256(text || 'a') || sha256(text || 'b')"
 )

@@ -26,7 +26,7 @@ scanner TIFFs are multi-strip.
 
 At 100 TB the decode rides the standard multimodal contract: one
 Arrow-batched mapInPandas, payloads never shuffle
-(multimodal/tiff_queries.py).
+(multimodal/decodes.py).
 
 Public spec: TIFF 6.0 (Adobe, 1992) §7 (PackBits), §13 (LZW).
 """

@@ -15,7 +15,7 @@ pattern, streaming/stateful.py:90):
     map-only, payloads never shuffle.
   * **pixel decode is capability-gated**: PIL/libwebp when importable
     (`decode_webp_native`), else `NotImplementedError` with a clear
-    reason — which the quarantine face (multimodal/quarantine.py)
+    reason — which the quarantine face (multimodal/decodes.py)
     isolates per-asset, so one WebP in a PNG corpus can't kill a job.
     The rejection is REASONED and MEASURED: `multimodal_webp_dims`
     reports the per-variant asset counts that would route to the

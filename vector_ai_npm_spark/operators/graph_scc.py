@@ -12,7 +12,9 @@ specialized to min-labels):
   2. HEADS: h is a head iff color(h) = h.  For any v with color(v)=h,
      v →* h by construction.
   3. CONFIRM: mark nodes reachable FROM their own head through
-     SAME-COLOR edges; marked ⇒ h →* v ⇒ mutual ⇒ SCC(h).
+     SAME-COLOR edges; marked ⇒ h →* v ⇒ mutual ⇒ SCC(h).  That is
+     ``operators.fixpoint.expand`` keyed by color, one search per head;
+     reaching the round cap raises.
      (Soundness of the same-color restriction: any node w on a path
      h →* v with color(v)=h satisfies h →* w — so fwd(w) ⊆ fwd(h),
      giving color(w) ≥ h — and w →* v →* h, giving h ∈ fwd(w), so
@@ -58,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_ai_npm_spark.io.sources import load_table
-from vector_ai_npm_spark.operators.fixpoint import min_labels
+from vector_ai_npm_spark.operators.fixpoint import expand, min_labels
 from vector_ai_npm_spark.registry import query
 
 
@@ -97,11 +99,13 @@ def scc_colored(
             max_rounds,
         ).select(F.col("node").alias("node_id"), F.col("label").alias("color"))
 
-        # 2+3. heads, then same-color forward reachability from heads
-        marked = color.where(F.col("node_id") == F.col("color")).select(
-            "node_id", "color"
-        ).localCheckpoint()
-        colored_edges = (
+        # 2+3. heads, then same-color forward reachability from heads:
+        # a same-color edge never leaves its color class, so one keyed
+        # frontier BFS per head confirms every class at once
+        heads = color.where(F.col("node_id") == F.col("color")).select(
+            "color", F.col("node_id").alias("node"), F.lit(0).alias("dist")
+        )
+        same_color_edges = (
             live.join(
                 color.select(
                     F.col("node_id").alias("src"),
@@ -117,32 +121,20 @@ def scc_colored(
                 "dst",
             )
             .where(F.col("src_color") == F.col("dst_color"))
-            .select("src", "dst", F.col("src_color").alias("color"))
+            .select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
             .localCheckpoint()
         )
-        for _round in range(max_rounds):
-            frontier = (
-                colored_edges.join(
-                    marked.select(
-                        F.col("node_id").alias("src"),
-                        F.col("color").alias("mcolor"),
-                    ),
-                    "src",
-                )
-                .where(F.col("color") == F.col("mcolor"))
-                .select(F.col("dst").alias("node_id"), "color")
-                .distinct()
-                .join(marked.select("node_id"), "node_id", "left_anti")
-            )
-            if frontier.isEmpty():
-                break
-            marked = marked.unionByName(frontier).localCheckpoint()
-        else:
+        marked = expand(same_color_edges, heads, max_rounds, key=("color",))
+        # a node at hop max_rounds means the search stopped at its cap,
+        # not at an empty frontier
+        if not marked.where(F.col("dist") == max_rounds).isEmpty():
             raise RuntimeError(
                 f"SCC confirmation did not converge in {max_rounds} rounds"
             )
 
-        found = marked.select("node_id", F.col("color").alias("scc_id"))
+        found = marked.select(
+            F.col("node").alias("node_id"), F.col("color").alias("scc_id")
+        )
         found_frames.append(found.localCheckpoint())
         remaining = remaining.join(
             found.select("node_id"), "node_id", "left_anti"

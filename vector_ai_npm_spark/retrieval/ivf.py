@@ -85,8 +85,6 @@ def build_ivf_index(store: DataFrame, vec_col: str = "embedding",
     closure. Replaces MLlib KMeans, whose ~max_iter distributed jobs
     priced a sample-sized problem at corpus scale every index build.
     """
-    from pyspark.sql.pandas.functions import pandas_udf
-
     n = store.count()
     sample = store.select(F.col(vec_col).cast("array<double>").alias("_v"))
     if n > _TRAIN_SAMPLE_CAP:
@@ -97,17 +95,7 @@ def build_ivf_index(store: DataFrame, vec_col: str = "embedding",
         )
     X = np.array([r[0] for r in sample.collect()], dtype=np.float64)
     C = _train_centroids(X, nlist=nlist, seed=seed)
-    c2 = (C * C).sum(axis=1)
-
-    @pandas_udf("int")
-    def _nearest_cell(v: pd.Series) -> pd.Series:
-        M = np.stack(v.to_numpy()).astype(np.float64)
-        d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-    assigned = store.withColumn(
-        "cell_id", _nearest_cell(F.col(vec_col).cast("array<double>"))
-    )
+    assigned = assign_to_cells(store, C, vec_col=vec_col)
     spark = store.sparkSession
     centroids = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
@@ -224,9 +212,8 @@ def assign_to_cells(
     """Assign vectors to FROZEN centroids (the incremental-append half
     of the index contract: new batches must join existing cells, not
     retrain them — retraining would silently move cell boundaries and
-    invalidate every already-written partition).  Same Arrow-batched
-    nearest-centroid map as build_ivf_index, with the centroid matrix
-    supplied instead of trained."""
+    invalidate every already-written partition).  build_ivf_index
+    assigns through it too, with the matrix it just trained."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     C = np.array(centroids, dtype=np.float64)

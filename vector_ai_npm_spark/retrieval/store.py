@@ -60,7 +60,7 @@ def persist_ivf_store(
         # (doubles round-trip parquet exactly), so the first
         # append/search against this store skips the read-back job —
         # the stream face paid that listing + collect per micro-batch
-        _centroid_cache_put(store_dir, matrix)
+        _centroid_cache_put(_centroid_cache_key(store_dir), matrix)
     else:
         centroids.write.mode("overwrite").parquet(f"{store_dir}/centroids")
 
@@ -274,8 +274,9 @@ def _centroid_cache_key(store_dir: str):
     return (root, files) if files else None
 
 
-def _centroid_cache_put(store_dir: str, matrix: list) -> None:
-    key = _centroid_cache_key(store_dir)
+def _centroid_cache_put(key, matrix: list) -> None:
+    """Memoize ``matrix`` under ``key`` (None = uncacheable), evicting
+    the oldest entries past the bound."""
     if key is None:
         return
     with _CENTROID_CACHE_LOCK:
@@ -312,11 +313,7 @@ def _frozen_centroid_matrix(spark: SparkSession, store_dir: str) -> list:
                 f"{pos} has cell_id={r.cell_id}; appends would misfile"
             )
     matrix = [list(r.centroid) for r in rows]
-    if key is not None:
-        with _CENTROID_CACHE_LOCK:
-            _CENTROID_CACHE[key] = [list(c) for c in matrix]
-            while len(_CENTROID_CACHE) > _CENTROID_CACHE_MAX:
-                _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+    _centroid_cache_put(key, matrix)
     return matrix
 
 
